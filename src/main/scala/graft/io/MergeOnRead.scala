@@ -51,7 +51,8 @@ object MergeOnRead {
 
   private def basePath(dir: String) = s"${dir.stripSuffix("/")}/base"
   private def deltaRoot(dir: String) = s"${dir.stripSuffix("/")}/delta"
-  private val BatchCol = "__mor_batch"
+  // the source tag every LWW pick ranks on: base −1, a delta its batch id
+  private[graft] val BatchCol = "__mor_batch"
 
   /** Deltas smaller than this (on-disk bytes, summed driver-side from
     * file listings — no job) resolve via the broadcast fast path.
@@ -229,9 +230,16 @@ object MergeOnRead {
                 "(concurrent ALTER) — the batch was validated against the " +
                 "superseded contract; retry the append")
         }
-        FsOps.stageAndCommitBatch(fs, root, next, commitId, recheck)(tmp =>
-          validated(spark, dir, updates)
-            .write.mode("overwrite").parquet(tmp.toString))
+        FsOps.stageAndCommitBatch(fs, root, next, commitId, recheck) { tmp =>
+          val batch = validated(spark, dir, updates)
+          batch.write.mode("overwrite").parquet(tmp.toString)
+          // the schema this batch was written with rides the SAME rename
+          // as its rows: readers take it from here instead of running a
+          // footer-inference job (see readDeltaBatch)
+          val out = fs.create(new Path(tmp, DeltaSchemaFile), true)
+          try out.write(batch.schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          finally out.close()
+        }
         next
     }
   }
@@ -325,22 +333,43 @@ object MergeOnRead {
     * file count would serve the stale schema; batch dirs are
     * committed-once by contract, so that window is unreachable in
     * normal operation.
+    *
+    * A memo miss takes the schema the batch RECORDED at commit
+    * ([[DeltaSchemaFile]], written by [[merge]] inside the staged dir,
+    * so it publishes with the rows) — one small driver read, no job.
+    * This matters for a batch first seen through the change-feed scan:
+    * its first readDeltaBatch comes a trigger later, from the next
+    * fold's PRE lookup, on the fold's critical path. Inference remains
+    * only for batches that predate the record.
     */
   private val deltaSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[
       (String, Long, Long, Int), org.apache.spark.sql.types.StructType]
 
+  /** Name of the schema record inside a committed delta batch dir. */
+  private[graft] val DeltaSchemaFile = "_schema.json"
+
+  /** Forget every memoized delta-batch schema (specs exercise the
+    * inference fallback with it).
+    */
+  private[graft] def clearDeltaSchemaMemo(): Unit = deltaSchemaCache.clear()
+
   private[graft] def readDeltaBatch(spark: SparkSession, p: String): DataFrame = {
     val path = new Path(p)
     val fs = FsOps.fs(spark, path)
-    val files = fs.listStatus(path).filter(s =>
+    val listed = fs.listStatus(path)
+    val files = listed.filter(s =>
       s.isFile && !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith("."))
     if (files.isEmpty) return spark.read.parquet(p) // degenerate: let Spark report
     val key = (p, files.map(_.getLen).sum,
       files.map(_.getModificationTime).max, files.length)
-    val schema = deltaSchemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(p).schema)
+    val schema = deltaSchemaCache.computeIfAbsent(key, _ =>
+      listed.find(_.getPath.getName == DeltaSchemaFile)
+        .flatMap(s => FsOps.readRawOpt(fs, s.getPath))
+        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+        .getOrElse(spark.read.parquet(p).schema))
     spark.read.schema(schema).parquet(p)
   }
 
@@ -701,8 +730,7 @@ object MergeOnRead {
     */
   private def deltaWinners(deltas: DataFrame, pk: Seq[String],
                            versionCol: String): DataFrame = {
-    val w = Window.partitionBy(pk.map(col): _*)
-      .orderBy(col(versionCol).desc, col(BatchCol).desc)
+    val w = Window.partitionBy(pk.map(col): _*).orderBy(lwwOrder(versionCol): _*)
     deltas.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
@@ -1717,7 +1745,39 @@ object MergeOnRead {
                                       snap: Snapshot, pk: Seq[String],
                                       values: Seq[String], versionCol: String,
                                       deleteFlagCol: Option[String],
-                                      numBuckets: Int): DataFrame = {
+                                      numBuckets: Int): DataFrame =
+    pinnedCandidates(spark, dir, snap, pk, values, numBuckets) match {
+      case None => spark.emptyDataFrame
+      case Some(all) =>
+        val resolved = all.withColumn("__rn", row_number().over(
+            Window.partitionBy(pk.map(col): _*).orderBy(lwwOrder(versionCol): _*)))
+          .filter(col("__rn") === 1).drop("__rn", BatchCol)
+        // same declared-schema reconciliation as readPinned: the feed's
+        // point and semi boundary images must agree column-for-column
+        reconcileDeclaredKv(spark, contractKv(spark, dir),
+          dropDeletes(resolved, deleteFlagCol))
+    }
+
+  /** Resolution order of every LWW pick over rows tagged with their
+    * source in [[BatchCol]] (base −1, a delta its batch id): newest
+    * version first (a null version loses), ties to the later source.
+    */
+  private[graft] def lwwOrder(versionCol: String): Seq[Column] =
+    Seq(col(versionCol).desc, col(BatchCol).desc)
+
+  /** The UNRESOLVED rows a pinned point lookup of `values` ranks: the
+    * base's bucket/Bloom candidate rows (tagged −1 in [[BatchCol]]) and
+    * every live delta row matching the keys (tagged with its batch id),
+    * widened to one schema and NOT reconciled against the declared
+    * schema. [[lookupPinnedKeys]] resolves them with [[lwwOrder]]; the
+    * change feed ranks them together with the admitted rows of the
+    * next range in ONE window (they share the pk exchange). None when
+    * the snapshot holds no base and no live delta.
+    */
+  private[graft] def pinnedCandidates(spark: SparkSession, dir: String,
+                                      snap: Snapshot, pk: Seq[String],
+                                      values: Seq[String],
+                                      numBuckets: Int): Option[DataFrame] = {
     val (manOpt, live) = (snap.man, snap.live)
     def residual(df: DataFrame): Column =
       if (pk.length == 1)
@@ -1739,20 +1799,12 @@ object MergeOnRead {
         val d = readDeltaBatch(spark, p)
         d.filter(residual(d)).withColumn(BatchCol, lit(id))
       }.reduce(_.unionByName(_, allowMissingColumns = true)))
-    val all = widenForEvolution(baseOpt.map(_.drop(BatchCol)), deltaOpt) match {
-      case (Some(b), Some(d)) => d.unionByName(b.withColumn(BatchCol, lit(-1L)))
-      case (Some(b), None) => b.withColumn(BatchCol, lit(-1L))
-      case (None, Some(d)) => d
-      case (None, None) => return spark.emptyDataFrame
+    widenForEvolution(baseOpt.map(_.drop(BatchCol)), deltaOpt) match {
+      case (Some(b), Some(d)) => Some(d.unionByName(b.withColumn(BatchCol, lit(-1L))))
+      case (Some(b), None) => Some(b.withColumn(BatchCol, lit(-1L)))
+      case (None, Some(d)) => Some(d)
+      case (None, None) => None
     }
-    val w = Window.partitionBy(pk.map(col): _*)
-      .orderBy(col(versionCol).desc, col(BatchCol).desc)
-    val resolved = all.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn", BatchCol)
-    // same declared-schema reconciliation as readPinned: the feed's
-    // point and semi boundary images must agree column-for-column
-    reconcileDeclaredKv(spark, contractKv(spark, dir),
-      dropDeletes(resolved, deleteFlagCol))
   }
 
   // ---- streaming-epoch watermarks ---------------------------------------

@@ -1,6 +1,7 @@
 package graft.rtdw
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.io.{ChangeFeed, MergeOnRead, Upsert}
@@ -27,8 +28,8 @@ import graft.sources.MorChangeFeedSource
   * case analysis, the snapshot resolution is the case analysis.
   *
   * Scale shape: both images restrict to the batch's OWN keys. Small
-  * batches (≤ `maxPointKeys` distinct keys, single-column pk) resolve
-  * through [[MergeOnRead.lookupPinned]] — manifest + Bloom candidate
+  * batches (≤ `maxPointKeys` distinct keys) resolve through
+  * [[MergeOnRead.pinnedCandidates]] — manifest + Bloom candidate
   * files, the HBase-Get shape, O(batch keys × candidate files)
   * whatever the base size. Bigger batches fall back to a broadcast
   * LEFT SEMI of the keys against the pinned resolved read: the base
@@ -73,17 +74,53 @@ object MorChangeFeed {
                     maxPointKeys: Int = 1024): DataFrame =
     retractStreamBounded(spark, morRoot, raw0, maxPointKeys, None)
 
+  /** An admitted micro-batch held on the driver: `rows` is a local
+    * relation over the collected feed rows (later steps read it without
+    * rescanning the batch), `bounds` its (kmin, kmax), None when empty.
+    */
+  private[graft] final case class Held(rows: DataFrame, bounds: Option[(Long, Long)])
+
+  /** Hold a micro-batch of at most `maxRows` rows on the driver, from
+    * ONE bounded collect of ≤ `maxRows + 1` rows; None when it is
+    * bigger. The bound is the point path's own: a batch of ≤
+    * `maxPointKeys` rows has ≤ `maxPointKeys` distinct keys, so its
+    * bounds, its key probe and its admitted rows all come from this one
+    * job instead of a min/max aggregation, a distinct-key probe and a
+    * rescan of the batch. `coalesce(1)` makes the capped take ONE task
+    * of ONE job that stops reading after `maxRows + 1` rows; a bare
+    * limit-collect scans partition by partition in a growing series of
+    * jobs.
+    */
+  private[graft] def hold(raw: DataFrame, maxRows: Int): Option[Held] = {
+    val got = raw.coalesce(1).limit(maxRows + 1).collect()
+    if (got.length > maxRows) None
+    else {
+      val ids = got.map(_.getAs[Long](MorChangeFeedSource.BatchCol))
+      Some(Held(
+        raw.sparkSession.createDataFrame(java.util.Arrays.asList(got: _*), raw.schema),
+        if (ids.isEmpty) None else Some((ids.min, ids.max))))
+    }
+  }
+
+  /** The change rows of an empty admitted range, typed like a
+    * non-empty one.
+    */
+  private[graft] def noChanges(raw: DataFrame): DataFrame =
+    raw.drop(MorChangeFeedSource.BatchCol).limit(0)
+      .withColumn(ChangeFeed.ChangeCol, lit(""))
+
   /** [[retractStream]] with the admitted range STATICALLY KNOWN
     * (ADVICE r12): the batch-CDC form builds `raw` from an explicit id
-    * range, so discovering (kmin, kmax) with a Spark min/max
-    * aggregation over every batch's rows would be a pure waste — the
-    * bounds ride in and the bounds job is skipped. The streaming form
-    * keeps the aggregation: its micro-batch is an offset-range of rows
-    * whose ids the consumer does not enumerate.
+    * range, and the streaming fold takes the bounds from its driver
+    * hold ([[hold]]) or one min/max aggregation, so the bounds ride in
+    * and the bounds job is skipped. `held` says `raw0` is a [[Held]]
+    * local relation: its key probe is then evaluated on the driver,
+    * without a job.
     */
   private[graft] def retractStreamBounded(spark: SparkSession, morRoot: String,
                                           raw0: DataFrame, maxPointKeys: Int,
-                                          knownBounds: Option[(Long, Long)]): DataFrame = {
+                                          knownBounds: Option[(Long, Long)],
+                                          held: Boolean = false): DataFrame = {
     val (pk, vc, del, n) = MergeOnRead.contract(spark, morRoot).getOrElse(
       throw new UnsupportedOperationException(
         s"$morRoot records no contract — the feed consumer needs pk/version"))
@@ -100,9 +137,7 @@ object MorChangeFeed {
         val bounds = raw.agg(
           min(col(MorChangeFeedSource.BatchCol)).as("kmin"),
           max(col(MorChangeFeedSource.BatchCol)).as("kmax")).head()
-        if (bounds.isNullAt(0))
-          return raw.drop(MorChangeFeedSource.BatchCol).limit(0)
-            .withColumn(ChangeFeed.ChangeCol, lit(""))
+        if (bounds.isNullAt(0)) return noChanges(raw)
         (bounds.getLong(0), bounds.getLong(1))
     }
     // NOTE (r16, measured-and-reverted): persisting this frame to share
@@ -113,15 +148,12 @@ object MorChangeFeed {
     // coalescing, and adds the columnar cache-build stages (jobs
     // 14→17, tasks 140→250 on mor_changes_batch). The win came from
     // deriving the touched buckets from the probe sample instead — see
-    // resolvePre.
+    // resolvePre. The streaming fold's small batches now take the other
+    // route: [[hold]] collects ≤ maxPointKeys + 1 rows in one job, which
+    // replaced the fold's min/max bounds job, the distinct-key probe
+    // and the fold's rescan of the batch; a bigger batch still runs
+    // the aggregation and the capped probe below.
     val keys = raw.select(pk.map(col): _*).distinct()
-
-    // notDeleted mirrors MergeOnRead's dropDeletes exactly
-    def live(df: DataFrame) = del match {
-      case Some(f) if df.columns.contains(f) =>
-        col(f) =!= "delete" || col(f).isNull
-      case _ => lit(true)
-    }
 
     // kmin == 0 is the BOOTSTRAP: nothing precedes the range — the
     // pre-image is empty, and every resolved row at kmax stems from
@@ -136,101 +168,164 @@ object MorChangeFeed {
     }
 
     val snapPre = MergeOnRead.snapshotAt(spark, morRoot, kmin - 1)
-    // deleteFlagCol = None: resolution is identical (version LWW), but
-    // tombstone WINNERS stay — a deleted key's tombstone must beat an
-    // admitted row of lower version in the derived POST below
-    val preFull = resolvePre(spark, morRoot, snapPre, keys, pk, vc, n,
-      maxPointKeys)
+    val manN = snapPre.man.map(_.numBuckets(n)).getOrElse(n)
+    // a held batch's rows ARE its keys (≤ maxPointKeys of them): the
+    // probe projects the local relation, which the optimizer evaluates
+    // on the driver — no distinct, no job
+    val probe =
+      if (held) keyProbe(raw, pk, manN).collect().distinct
+      else keyProbe(keys, pk, manN).limit(maxPointKeys + 1).collect()
+    val admitted = raw.withColumnRenamed(MorChangeFeedSource.BatchCol,
+      MergeOnRead.BatchCol)
+    val ranked = prePath(spark, morRoot, snapPre, keys, probe, pk, vc, manN,
+        maxPointKeys) match {
+      // point path: the PRE candidates (base −1, deltas their batch id,
+      // all < kmin) are ranked TOGETHER with the admitted rows — the
+      // PRE LWW and the POST LWW ride one pk exchange instead of two
+      case Left(ks) =>
+        val cands =
+          if (ks.isEmpty) None
+          else MergeOnRead.pinnedCandidates(spark, morRoot, snapPre, pk, ks, n)
+        rankImages(cands.map(MergeOnRead.reconcileDeclared(spark, morRoot, _)),
+          admitted, pk, vc, kmin)
+      // deleteFlagCol = None: resolution is identical (version LWW), but
+      // tombstone WINNERS stay — a deleted key's tombstone must beat an
+      // admitted row of lower version in the derived POST
+      case Right(pre) =>
+        rankImages(Some(pre.withColumn(MergeOnRead.BatchCol, lit(-1L))),
+          admitted, pk, vc, kmin)
+    }
+    emitChanges(ranked, del)
+  }
 
-    // one window over PRE ∪ admitted rows emits BOTH roles: every live
-    // PRE row retracts; the per-key (version DESC NULLS LAST, source
-    // DESC) winner adds if live. PRE's source is −1 (< every admitted
-    // batch id, so version ties fall to the admitted row — the same
-    // base-is-batch−1 ordering the resolution itself uses); within the
-    // admitted rows the source is their own batch id, matching
-    // deltaWinners' ordering. An admitted LWW loser yields equal
-    // retract and add that cancel in the signed fold, exactly as the
-    // two-resolve form did.
-    val src = "__cf_src"
-    require(!raw.columns.contains(src) && !raw.columns.contains("__cf_rn"),
-      s"feed rows must not carry the reserved columns $src/__cf_rn")
-    val combined = preFull.withColumn(src, lit(-1L))
-      .unionByName(
-        raw.withColumn(src, col(MorChangeFeedSource.BatchCol))
-          .drop(MorChangeFeedSource.BatchCol),
-        allowMissingColumns = true)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pk.map(col): _*)
-      .orderBy(col(vc).desc, col(src).desc)
-    val ranked = combined.withColumn("__cf_rn", row_number().over(w))
-    val dataCols = combined.columns.filterNot(c => c == src || c == "__cf_rn")
-    ranked.select(dataCols.map(col).toIndexedSeq :+
+  // reserved columns of the PRE/POST ranking
+  private val PreCol = "__cf_pre"
+  private val RnCol = "__cf_rn"
+  private val PreRnCol = "__cf_pre_rn"
+
+  /** ONE window pass over PRE ∪ admitted rows ranks both images. PRE
+    * rows carry a source tag below kmin in [[MergeOnRead.BatchCol]]
+    * (base −1, a pre-range delta its batch id), admitted rows their own
+    * batch id ≥ kmin; both ranks use [[MergeOnRead.lwwOrder]]. The POST
+    * winner is the first row of the key ([[RnCol]] = 1); the PRE winner
+    * the first row with a tag below kmin ([[PreRnCol]] = 1 among the
+    * PRE rows). The (pk, isPre) partitioning is satisfied by the pk
+    * exchange, so both ranks share one shuffle. Version ties fall to
+    * the admitted row: its tag exceeds every PRE tag — the same
+    * base-is-batch−1 ordering the resolution itself uses. A PRE side of
+    * several rows per key (unresolved point-lookup candidates) is
+    * resolved by its own rank; one already resolved ranks 1 trivially.
+    */
+  private def rankImages(pre: Option[DataFrame], admitted: DataFrame,
+                         pk: Seq[String], vc: String, kmin: Long): DataFrame = {
+    require(!admitted.columns.exists(Seq(PreCol, RnCol, PreRnCol).contains),
+      s"feed rows must not carry the reserved columns $PreCol/$RnCol/$PreRnCol")
+    val all = pre.fold(admitted)(_.unionByName(admitted, allowMissingColumns = true))
+      .withColumn(PreCol, col(MergeOnRead.BatchCol) < kmin)
+    val order = MergeOnRead.lwwOrder(vc)
+    all.withColumn(RnCol, row_number().over(
+        Window.partitionBy(pk.map(col): _*).orderBy(order: _*)))
+      .withColumn(PreRnCol, row_number().over(
+        Window.partitionBy((pk :+ PreCol).map(col): _*).orderBy(order: _*)))
+  }
+
+  /** The data columns of a [[rankImages]] frame. */
+  private def dataColsOf(ranked: DataFrame): Seq[String] =
+    ranked.columns.toSeq.filterNot(Set(MergeOnRead.BatchCol, PreCol, RnCol, PreRnCol))
+
+  /** Every live PRE winner retracts; every live POST winner adds. An
+    * admitted LWW loser yields equal retract and add that cancel in the
+    * signed fold, exactly as the two-resolve form did.
+    */
+  private def emitChanges(ranked: DataFrame, del: Option[String]): DataFrame = {
+    // notDeleted mirrors MergeOnRead's dropDeletes exactly
+    val live = del match {
+      case Some(f) if ranked.columns.contains(f) => col(f) =!= "delete" || col(f).isNull
+      case _ => lit(true)
+    }
+    ranked.select(dataColsOf(ranked).map(col) :+
       explode(array(
-        when(col(src) === -1L && live(ranked), lit("retract")),
-        when(col("__cf_rn") === 1 && live(ranked), lit("add"))
+        when(col(PreCol) && col(PreRnCol) === 1 && live, lit("retract")),
+        when(col(RnCol) === 1 && live, lit("add"))
       )).as(ChangeFeed.ChangeCol): _*)
       .filter(col(ChangeFeed.ChangeCol).isNotNull)
   }
 
-  /** The PRE-boundary resolve for a bounded key frame — the one place
-    * the feed touches the base. Point path: bounded key set → pinned
-    * Bloom lookups, O(candidate files) for the one image whatever the
-    * base size. Composite pks ride the canonical key axis (r12 —
-    * previously semi-only): the bucket/Bloom narrowing is exact for
-    * any arity, and a canonical-concatenation collision returns at
-    * most an extra UNTOUCHED key whose equal retract/add pair cancels
-    * in the fold. Keys with a NULL component fall to the semi path
-    * (the canonical axis cannot represent them distinctly). Semi path:
-    * touched-bucket pruning (r12) shrinks the base scan to the keys'
-    * placement fraction; a wave touching every bucket degrades to the
-    * full scan it needed anyway. Tombstone winners KEPT (del = None).
+  /** The key probe that picks the PRE path, one row per key: canonical
+    * key, whether a component is NULL, and the key's placement bucket.
+    * The bucket column is the SAME expression touchedBuckets hashes
+    * (canonicalKey == Upsert.keyStr), so the probe's buckets are exact
+    * placements.
+    */
+  private def keyProbe(keys: DataFrame, pk: Seq[String], manN: Int): DataFrame =
+    keys.select(
+      MergeOnRead.canonicalKey(pk).as("__k"),
+      pk.map(col(_).isNull).reduce(_ || _).as("__null"),
+      pmod(xxhash64(MergeOnRead.canonicalKey(pk)), lit(manN)).cast("int").as("__b"))
+
+  /** The PRE-boundary path for a probed key frame — the one place the
+    * feed decides how to touch the base. Left(point keys): a bounded,
+    * null-free key set (≤ `maxPointKeys` keys, empty when there are
+    * none) resolves through pinned Bloom lookups, O(candidate files)
+    * for the one image whatever the base size. Composite pks ride the
+    * canonical key axis (r12 — previously semi-only): the bucket/Bloom
+    * narrowing is exact for any arity, and a canonical-concatenation
+    * collision returns at most an extra UNTOUCHED key whose equal
+    * retract/add pair cancels in the fold. Keys with a NULL component
+    * fall to the semi path (the canonical axis cannot represent them
+    * distinctly). Right(image): the semi path — touched-bucket pruning
+    * (r12) shrinks the base scan to the keys' placement fraction; a
+    * wave touching every bucket degrades to the full scan it needed
+    * anyway. Tombstone winners KEPT (del = None).
+    *
+    * `probe` is the capped [[keyProbe]] (r16, guide §2.6 duplicated
+    * subtrees: the old semi path re-evaluated the wave-key frame —
+    * delta scans plus a distinct — a second time just to learn the
+    * touched buckets). Two facts make the touched-bucket job
+    * skippable: an UNTRUNCATED probe (≤ maxPointKeys rows) IS the full
+    * key set, so its buckets are the complete touched set; a truncated
+    * probe that already covers every bucket proves the full set does
+    * too (more keys can only add buckets). Only a truncated probe with
+    * uncovered buckets still pays the full touched-bucket scan — the
+    * narrow-wave case where pruning has real I/O to save.
+    */
+  private def prePath(spark: SparkSession, morRoot: String,
+                      snapPre: MergeOnRead.Snapshot, keys: DataFrame,
+                      probe: Array[org.apache.spark.sql.Row],
+                      pk: Seq[String], vc: String, manN: Int,
+                      maxPointKeys: Int): Either[Seq[String], DataFrame] =
+    if (probe.length <= maxPointKeys && !probe.exists(_.getBoolean(1)))
+      Left(probe.map(_.getString(0)).toSeq)
+    else {
+      val sampled = probe.map(_.getInt(2)).toSet
+      val touched =
+        if (probe.length <= maxPointKeys) sampled // untruncated: exact
+        else if (sampled.size >= manN) sampled    // covers every bucket
+        else MergeOnRead.touchedBuckets(keys, pk, manN)
+      val resolved = MergeOnRead.readPinned(spark, morRoot, snapPre, pk, vc,
+        None, broadcastBudget(spark), baseBuckets = Some(touched))
+      Right(resolved.join(broadcast(keys),
+        pk.map(c => resolved(c) <=> keys(c)).reduce(_ && _), "left_semi"))
+    }
+
+  /** The resolved PRE image of a bounded key frame (the carried form's
+    * base resolve): [[prePath]] with the point keys resolved through
+    * [[MergeOnRead.lookupPinnedKeys]].
     */
   private def resolvePre(spark: SparkSession, morRoot: String,
                          snapPre: MergeOnRead.Snapshot, keys: DataFrame,
                          pk: Seq[String], vc: String, n: Int,
                          maxPointKeys: Int): DataFrame = {
     val manN = snapPre.man.map(_.numBuckets(n)).getOrElse(n)
-    // ONE capped probe decides the path AND carries each sampled key's
-    // placement bucket (r16, guide §2.6 duplicated subtrees: the old
-    // semi path re-evaluated the wave-key frame — delta scans plus a
-    // distinct — a second time just to learn the touched buckets).
-    // The bucket column is the SAME expression touchedBuckets hashes
-    // (canonicalKey == Upsert.keyStr), so the sample's buckets are
-    // exact placements, and two facts make the extra job skippable:
-    // an UNTRUNCATED sample (≤ maxPointKeys rows) IS the full key set,
-    // so its buckets are the complete touched set; a truncated sample
-    // that already covers every bucket proves the full set does too
-    // (more keys can only add buckets). Only a truncated sample with
-    // uncovered buckets still pays the full touched-bucket scan — the
-    // narrow-wave case where pruning has real I/O to save.
-    val probe = keys.select(
-        MergeOnRead.canonicalKey(pk).as("__k"),
-        pk.map(col(_).isNull).reduce(_ || _).as("__null"),
-        pmod(xxhash64(MergeOnRead.canonicalKey(pk)), lit(manN))
-          .cast("int").as("__b"))
-      .limit(maxPointKeys + 1).collect()
-    // NO keys to resolve (a fully-covered carried trigger): a typed
-    // empty frame, zero base I/O — don't thread an empty in-list
-    // through the lookup machinery
-    if (probe.isEmpty) return keys.limit(0)
-    val pointKeys: Option[Seq[String]] =
-      if (probe.length > maxPointKeys || probe.exists(_.getBoolean(1))) None
-      else Some(probe.map(_.getString(0)).toSeq)
-    pointKeys match {
-      case Some(ks) =>
-        MergeOnRead.lookupPinnedKeys(spark, morRoot, snapPre, pk, ks, vc,
-          None, n)
-      case None =>
-        val sampled = probe.map(_.getInt(2)).toSet
-        val touched =
-          if (probe.length <= maxPointKeys) sampled // untruncated: exact
-          else if (sampled.size >= manN) sampled    // covers every bucket
-          else MergeOnRead.touchedBuckets(keys, pk, manN)
-        val resolved = MergeOnRead.readPinned(spark, morRoot, snapPre, pk, vc,
-          None, broadcastBudget(spark),
-          baseBuckets = Some(touched))
-        resolved.join(broadcast(keys),
-          pk.map(c => resolved(c) <=> keys(c)).reduce(_ && _), "left_semi")
+    val probe = keyProbe(keys, pk, manN).limit(maxPointKeys + 1).collect()
+    prePath(spark, morRoot, snapPre, keys, probe, pk, vc, manN, maxPointKeys) match {
+      // NO keys to resolve (a fully-covered carried trigger): a typed
+      // empty frame, zero base I/O — don't thread an empty in-list
+      // through the lookup machinery
+      case Left(ks) if ks.isEmpty => keys.limit(0)
+      case Left(ks) =>
+        MergeOnRead.lookupPinnedKeys(spark, morRoot, snapPre, pk, ks, vc, None, n)
+      case Right(pre) => pre
     }
   }
 
@@ -302,11 +397,6 @@ object MorChangeFeed {
       maxPointKeys)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    def live(df: DataFrame) = del match {
-      case Some(f) if df.columns.contains(f) =>
-        col(f) =!= "delete" || col(f).isNull
-      case _ => lit(true)
-    }
     val carriedPreWave = carried.map(c =>
       c.rows.join(waveKeys, keyEq(c.rows, waveKeys), "left_semi"))
     val freshPreWave =
@@ -315,31 +405,16 @@ object MorChangeFeed {
       .map(_.unionByName(freshPreWave, allowMissingColumns = true))
       .getOrElse(freshPreWave)
 
-    val src = "__cf_src"
-    require(!raw.columns.contains(src) && !raw.columns.contains("__cf_rn"),
-      s"feed rows must not carry the reserved columns $src/__cf_rn")
-    val combined = preWave.withColumn(src, lit(-1L))
-      .unionByName(
-        raw.withColumn(src, col(MorChangeFeedSource.BatchCol))
-          .drop(MorChangeFeedSource.BatchCol),
-        allowMissingColumns = true)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pk.map(col): _*)
-      .orderBy(col(vc).desc, col(src).desc)
-    val ranked = combined.withColumn("__cf_rn", row_number().over(w))
-    val dataCols = combined.columns.filterNot(c => c == src || c == "__cf_rn")
-    val changes = ranked.select(dataCols.map(col).toIndexedSeq :+
-      explode(array(
-        when(col(src) === -1L && live(ranked), lit("retract")),
-        when(col("__cf_rn") === 1 && live(ranked), lit("add"))
-      )).as(ChangeFeed.ChangeCol): _*)
-      .filter(col(ChangeFeed.ChangeCol).isNotNull)
+    val ranked = rankImages(Some(preWave.withColumn(MergeOnRead.BatchCol, lit(-1L))),
+      raw.withColumnRenamed(MorChangeFeedSource.BatchCol, MergeOnRead.BatchCol),
+      pk, vc, kmin)
+    val changes = emitChanges(ranked, del)
 
     // carry AS OF kmax: wave keys take their window winner (tombstones
     // included); covered and freshly-resolved keys OUTSIDE the wave
     // are untouched by the range, so their kmin−1 state carries as-is
-    val postWave = ranked.filter(col("__cf_rn") === 1)
-      .select(dataCols.map(col).toIndexedSeq: _*)
+    val postWave = ranked.filter(col(RnCol) === 1)
+      .select(dataColsOf(ranked).map(col): _*)
     val untouchedCarried = carried.map(c =>
       c.rows.join(waveKeys, keyEq(c.rows, waveKeys), "left_anti"))
     val untouchedFresh =

@@ -22,9 +22,9 @@ import graft.io.Upsert
   * Idempotent under replay: the day-aggregate merge is LWW on
   * `__v = batchId` (a replayed batch re-merges identical finals — a
   * no-op) and the leaderboard snapshot is a pure function of the
-  * aggregate table. At 100 TB the fact stream never reaches the rank:
-  * the only shuffle is the windowed aggregation; the rank runs over
-  * |groups × days| rows.
+  * aggregate generation it records. At 100 TB the fact stream never
+  * reaches the rank: the only shuffle is the windowed aggregation; the
+  * rank runs over |groups × days| rows.
   */
 object Leaderboard {
 
@@ -41,11 +41,24 @@ object Leaderboard {
       Seq(sum(floor(col("value") * 100).cast("long")).as("day_cents")))
       .select(col("cur_date").as("day"), col("event_type"), col("day_cents"))
 
+  // "<day-aggregate generation>:<n>" a top-N snapshot was ranked from,
+  // recorded in the snapshot's own manifest props
+  private val RankedFromProp = "rankedFrom"
+
   /** foreachBatch body: fold this batch's finalized windows into the
     * day-aggregate table and refresh the top-N snapshot. Append-mode
     * finals are complete per window (every key of a window emits in
     * the batch whose watermark closed it), so the merge is a plain
     * LWW upsert — no partial-window reconciliation needed.
+    *
+    * The top-N is rewritten only when the day aggregate's generation
+    * (or `n`) differs from the one the served snapshot records: most
+    * triggers (every no-data watermark trigger, every wave that closes
+    * no day) merge no finals and skip the rank, its write and the
+    * vacuum. The recorded generation commits in the same manifest
+    * rename as the ranked rows, so the condition is replay-safe: a
+    * crash between the merge and the refresh leaves the two
+    * generations different, and the next trigger refreshes.
     */
   def fold(spark: SparkSession, dir: String, finals: DataFrame,
            batchId: Long, n: Int = 3): Unit = {
@@ -58,11 +71,19 @@ object Leaderboard {
           f.withColumn("__v", lit(batchId)),
           pk = Seq("event_type", "day"), versionCol = "__v")
     } finally { f.unpersist(); () }
-    Upsert.readIfExists(spark, aggDir(dir)).foreach { agg =>
-      Upsert.overwriteSnapshot(spark, topDir(dir),
-        graft.ops.Relational.topNPerGroupDf(
-          agg.select(col("event_type"), col("day"), col("day_cents")), n))
-      Upsert.vacuum(spark, topDir(dir), keepManifests = 2)
+    Upsert.currentManifest(spark, aggDir(dir)).foreach { agg =>
+      val from = s"${agg.gen}:$n"
+      if (!Upsert.currentManifest(spark, topDir(dir))
+            .flatMap(_.props.get(RankedFromProp)).contains(from)) {
+        // ranked AT the recorded generation: a merge committing
+        // meanwhile cannot make the recorded gen lie about the content
+        val rows = Upsert.readAt(spark, aggDir(dir), agg.gen)
+        Upsert.overwriteSnapshot(spark, topDir(dir),
+          graft.ops.Relational.topNPerGroupDf(
+            rows.select(col("event_type"), col("day"), col("day_cents")), n),
+          props = Map(RankedFromProp -> from))
+        Upsert.vacuum(spark, topDir(dir), keepManifests = 2)
+      }
     }
   }
 

@@ -198,6 +198,122 @@ class MorChangeFeedSpec extends SparkSpec {
     assert(viaPoint == full)
   }
 
+  /** The (gid, Σcents, row_ct) rows a full recompute over `fact` gives. */
+  private def recompute(fact: String): Set[String] =
+    MergeOnRead.read(spark, fact, pk, "__v", Some("op"))
+      .groupBy(col("gid"))
+      .agg(sum(col("cents")).as("cents"), count(lit(1)).as("row_ct"))
+      .collect().map(_.mkString("|")).toSet
+
+  private def served(dws: String): Set[String] =
+    IncrementalDws.current(spark, dws).get
+      .select("gid", "cents", "row_ct").collect().map(_.mkString("|")).toSet
+
+  /** Drain the fold once; returns the job count of each micro-batch
+    * that admitted rows in this run.
+    */
+  private def drainCounting(log: graft.JobLog, fact: String, dws: String,
+                            ckpt: String, cap: Int = 1024): Seq[Int] = {
+    val q = IncrementalDws.streamingMor(spark, fact, dws,
+      groupCols = Seq("gid"), sumCols = Seq("cents"), checkpointDir = ckpt,
+      maxBatchesPerTrigger = Some(1), maxPointKeys = cap)
+    q.awaitTermination(120000)
+    val jobs = log.perBatch(q.id)
+    q.recentProgress.filter(_.numInputRows > 0).map(p => jobs.getOrElse(p.batchId, 0)).toSeq
+  }
+
+  test("job budget: a point-path streamingMor micro-batch runs at most 4 Spark jobs") {
+    val root = Files.createTempDirectory("morcdf_jobs").toString
+    val fact = s"$root/fact"; val dws = s"$root/dws"; val ckpt = s"$root/ckpt"
+    MergeOnRead.merge(spark, fact, mkWave(1L, 0 until 200))
+    MergeOnRead.recordContract(spark, fact, pk, "__v", Some("op"),
+      Upsert.DefaultNumBuckets)
+    graft.JobLog.around(spark) { log =>
+      drainCounting(log, fact, dws, ckpt) // bootstrap (kmin = 0)
+      // wave 2 reaches this consumer through the feed scan only, so the
+      // wave-3 fold's PRE lookup is the first readDeltaBatch of it
+      MergeOnRead.merge(spark, fact, mkWave(2L, 0 until 200 by 5))
+      drainCounting(log, fact, dws, ckpt)
+      // caught up, one wave per trigger (a visible backlog would take
+      // the carried-image path instead)
+      val jobs = Seq(mkWave(3L, 3 until 200 by 7),
+          mkWave(4L, 0 until 60 by 11, del = true)).flatMap { w =>
+        MergeOnRead.merge(spark, fact, w)
+        drainCounting(log, fact, dws, ckpt)
+      }
+      assert(jobs.size == 2, s"two admitted micro-batches expected, got $jobs")
+      assert(jobs.forall(_ <= 4), s"jobs per point-path micro-batch: $jobs")
+    }
+    assert(served(dws) == recompute(fact))
+  }
+
+  test("bounded collect at its bound: batches of maxPointKeys and maxPointKeys + 1 rows fold exactly") {
+    val root = Files.createTempDirectory("morcdf_bound").toString
+    val fact = s"$root/fact"; val dws = s"$root/dws"; val ckpt = s"$root/ckpt"
+    val cap = 8
+    MergeOnRead.merge(spark, fact, mkWave(1L, 0 until 40))
+    MergeOnRead.recordContract(spark, fact, pk, "__v", Some("op"),
+      Upsert.DefaultNumBuckets)
+    graft.JobLog.around(spark) { log =>
+      drainCounting(log, fact, dws, ckpt, cap)
+      // exactly cap rows: held on the driver
+      MergeOnRead.merge(spark, fact, mkWave(2L, 0 until cap))
+      val atCap = drainCounting(log, fact, dws, ckpt, cap)
+      assert(served(dws) == recompute(fact), "cap rows")
+      assert(atCap.size == 1 && atCap.head <= 4, s"a cap-row batch is held: $atCap")
+      // cap + 1 rows over cap keys (one key twice): not held, the
+      // capped probe still takes the point path
+      MergeOnRead.merge(spark, fact,
+        mkWave(3L, 10 until 10 + cap).union(mkWave(5L, 10 until 11)))
+      drainCounting(log, fact, dws, ckpt, cap)
+      assert(served(dws) == recompute(fact), "cap + 1 rows, cap keys")
+      // cap + 1 rows over cap + 1 keys: the semi path
+      MergeOnRead.merge(spark, fact, mkWave(4L, 20 until 21 + cap))
+      val overCap = drainCounting(log, fact, dws, ckpt, cap)
+      assert(served(dws) == recompute(fact), "cap + 1 rows, cap + 1 keys")
+      assert(overCap.size == 1 && overCap.head > 4,
+        s"a batch over the bound keeps the aggregation and probe jobs: $overCap")
+    }
+  }
+
+  test("delta batch schema: recorded at commit, inferred for a batch without the record") {
+    val root = Files.createTempDirectory("morcdf_schema").toString
+    val fact = s"$root/fact"; val dws = s"$root/dws"; val ckpt = s"$root/ckpt"
+    MergeOnRead.merge(spark, fact, mkWave(1L, 0 until 100))
+    MergeOnRead.recordContract(spark, fact, pk, "__v", Some("op"),
+      Upsert.DefaultNumBuckets)
+    MergeOnRead.merge(spark, fact, mkWave(2L, 0 until 100 by 3))
+    val (_, p) = MergeOnRead.deltaBatches(spark, fact).last
+    val dir = new org.apache.hadoop.fs.Path(p)
+    val fs = graft.io.FsOps.fs(spark, dir)
+    graft.JobLog.around(spark) { log =>
+      // the recorded schema serves a cold memo without a job
+      MergeOnRead.clearDeltaSchemaMemo(); log.clear()
+      val recorded = MergeOnRead.readDeltaBatch(spark, p).schema
+      assert(log.jobs().isEmpty, "a recorded schema must not run an inference job")
+      // a batch without the record (written before it existed) still
+      // reads: the schema is inferred, by a job, and agrees
+      fs.listStatus(dir).map(_.getPath)
+        .filter(_.getName.contains(MergeOnRead.DeltaSchemaFile))
+        .foreach(fs.delete(_, false))
+      MergeOnRead.clearDeltaSchemaMemo(); log.clear()
+      val inferred = MergeOnRead.readDeltaBatch(spark, p).schema
+      assert(log.jobs().nonEmpty, "no record: the schema is inferred")
+      assert(inferred == recorded, s"inferred=$inferred\n recorded=$recorded")
+    }
+    // and the fold over the record-less batch stays exact
+    MergeOnRead.clearDeltaSchemaMemo()
+    IncrementalDws.streamingMor(spark, fact, dws, groupCols = Seq("gid"),
+      sumCols = Seq("cents"), checkpointDir = ckpt,
+      maxBatchesPerTrigger = Some(1)).awaitTermination(120000)
+    MergeOnRead.merge(spark, fact, mkWave(3L, 0 until 100 by 4))
+    MergeOnRead.clearDeltaSchemaMemo()
+    IncrementalDws.streamingMor(spark, fact, dws, groupCols = Seq("gid"),
+      sumCols = Seq("cents"), checkpointDir = ckpt,
+      maxBatchesPerTrigger = Some(1)).awaitTermination(120000)
+    assert(served(dws) == recompute(fact))
+  }
+
   test("start order stops mattering: an empty sink-created root serves SQL, reads, and the feed as a typed empty table") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
