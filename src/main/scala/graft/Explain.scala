@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.chaining._
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of a registered query. */
@@ -11,8 +12,7 @@ object Explain {
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .pipe(graft.core.GraftSession.engineConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, sf)

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.util.chaining._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.io.{SourceConf, Sources}
@@ -22,8 +23,7 @@ object StreamingDemo {
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .pipe(graft.core.GraftSession.engineConfs)
       .getOrCreate()
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")

@@ -107,8 +107,7 @@ object DimRegistry {
   * rule never overwrites a non-empty slot, which also makes it
   * idempotent inside a fixed-point optimizer batch.
   *
-  * Injected by [[GraftExtensions]] at session build; use
-  * [[DimBroadcast.ensureInjected]] to add it to a running session.
+  * Injected by [[GraftExtensions]] at session build.
   */
 case class DimBroadcastRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -136,16 +135,4 @@ case class DimBroadcastRule(spark: SparkSession) extends Rule[LogicalPlan] {
           j.copy(hint = j.hint.copy(leftHint = Some(HintInfo(strategy = Some(BROADCAST)))))
         else j
     }
-}
-
-object DimBroadcast {
-  /** Inject the rule into an already-running session (sessions built
-    * via [[GraftSession]]/[[GraftExtensions]] have it already; applying
-    * twice is harmless — the rule only fills empty hint slots).
-    */
-  def ensureInjected(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[DimBroadcastRule]))
-      spark.experimental.extraOptimizations = cur :+ DimBroadcastRule(spark)
-  }
 }

@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import graft.functions.VectorExprs._
 
 /** SparkSessionExtensions entry point: exposes the engine's native
-  * expressions to pure-SQL users.
+  * expressions to pure-SQL users and installs its analyzer, optimizer
+  * and query-stage rules and its planner strategies — the one way
+  * they reach a session.
   *
   *   SparkSession.builder().withExtensions(new GraftExtensions) ...
   *   // or: --conf spark.sql.extensions=graft.core.GraftExtensions
@@ -36,7 +38,29 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // aggregate queries over MvRegistry-declared sources re-target to
     // their pre-aggregated rollup tables (see MvRewriteRule)
     e.injectOptimizerRule(session => MvRewriteRule(session))
+    // physical plans for the engine's own logical nodes: the as-of
+    // merge join and the verified ordering assertion (graft.plans)
+    e.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => new graft.plans.OrderedGuardStrategy)
   }
+}
+
+object GraftExtensions {
+
+  /** The refusal a session built without GraftExtensions gets when it
+    * reaches for something only the extensions install.
+    */
+  def missing(what: String): String =
+    s"$what — start the session with GraftExtensions " +
+      "(spark.sql.extensions=graft.core.GraftExtensions)"
+
+  /** Refuse at once when `spark`'s planner lacks the strategy `what`
+    * names, instead of failing later with "no plan for" the node.
+    */
+  def requireStrategy(spark: SparkSession, cls: Class[_], what: String): Unit =
+    if (!spark.sessionState.planner.strategies.exists(cls.isInstance))
+      throw new UnsupportedOperationException(
+        missing(s"$what need the ${cls.getSimpleName} planner strategy"))
 }
 
 object GraftFunctions {

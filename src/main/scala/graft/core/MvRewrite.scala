@@ -158,8 +158,7 @@ object Mv {
 
 /** The rewrite rule. Injected into the operator-optimization batch via
   * [[GraftExtensions]] (so column pruning and predicate pushdown still
-  * run over the substituted MV scan in the same fixed point);
-  * [[MvRewrite.ensureInjected]] adds it to a running session.
+  * run over the substituted MV scan in the same fixed point).
   */
 case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -297,18 +296,5 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val newGrouping = groupAttrs.map(a => mvAttr.getOrElse(a.name, return None))
     Some(agg.copy(groupingExpressions = newGrouping,
       aggregateExpressions = rewritten, child = newChild))
-  }
-}
-
-object MvRewrite {
-  /** Inject into an already-running session (sessions built with
-    * [[GraftExtensions]] carry the rule in the operator-optimization
-    * batch already; this fallback appends to the experimental batch,
-    * which runs after pruning — correct, marginally less pruned).
-    */
-  def ensureInjected(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[MvRewriteRule]))
-      spark.experimental.extraOptimizations = cur :+ MvRewriteRule(spark)
   }
 }

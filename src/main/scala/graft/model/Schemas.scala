@@ -61,16 +61,6 @@ object Schemas {
 /** A keyed event for per-key daily-state operators (A6 family). */
 case class KeyDay(key: String, day: String)
 
-/** KeyDay with an event-time column (derived from day) — the input
-  * shape of the TTL-evicting A6 variants, whose event-time timeouts
-  * need a watermarked timestamp.
-  */
-case class KeyDayTs(key: String, day: String, ts: java.sql.Timestamp)
-
-/** VisitorHit with an event-time column (see [[KeyDayTs]]). */
-case class VisitorHitTs(mid: String, day: String, isNew: String,
-                        ts: java.sql.Timestamp)
-
 /** Output of FirstSeenPerDay: a key's first appearance on a day. */
 case class FirstSeen(key: String, day: String)
 
@@ -82,10 +72,6 @@ case class VisitorHitFixed(mid: String, day: String, isNew: String)
 
 /** Per-key last-value state for upsert-correction (A7). */
 case class VersionedAmount(key: String, ts: Long, amount: Long)
-
-/** VersionedAmount with an event-time column (see [[KeyDayTs]]). */
-case class VersionedAmountTs(key: String, ts: Long, amount: Long,
-                             et: java.sql.Timestamp)
 
 /** Emitted delta so downstream sums telescope to the latest value. */
 case class AmountDelta(key: String, ts: Long, delta: Long)

@@ -628,7 +628,6 @@ object Relational {
   def j5SkuChainAuto(spark: SparkSession, sfDir: String): DataFrame = {
     val path = s"$sfDir/part.parquet"
     graft.core.DimRegistry.register(spark, path)
-    graft.core.DimBroadcast.ensureInjected(spark)
     try {
       val df = skuChain(spark, sfDir, identity)
       // Force logical optimization NOW, while `part` is registered: the
@@ -772,7 +771,6 @@ object Relational {
         graft.core.MvAgg("max", "n_chars", "max_chars_mv")))
     graft.core.Mv.ensure(spark, mv)
     graft.core.MvRegistry.register(spark, mv)
-    graft.core.MvRewrite.ensureInjected(spark)
     try {
       val df = Tables.documents(spark, sfDir)
         .groupBy(col("source"))

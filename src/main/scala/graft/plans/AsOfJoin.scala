@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -49,9 +49,9 @@ case class AsOfJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinNode]] to [[AsOfJoinExec]]; injected via
-  * `spark.experimental.extraStrategies` (tried before the built-in
-  * strategies) by [[AsOfJoin.ensureInjected]].
+/** Plans [[AsOfJoinNode]] to [[AsOfJoinExec]]; installed by
+  * [[graft.core.GraftExtensions]] (extension strategies are tried
+  * before the built-in ones).
   */
 class AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -146,14 +146,8 @@ case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Builder + strategy injection. */
+/** Builder of the as-of join node. */
 object AsOfJoin {
-
-  def ensureInjected(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[AsOfJoinStrategy]))
-      spark.experimental.extraStrategies = cur :+ new AsOfJoinStrategy
-  }
 
   /** `probe` AS-OF `history`: each probe row gets the latest history
     * row at or before its timestamp within `key`. Output columns:
@@ -165,7 +159,7 @@ object AsOfJoin {
            probeTs: String, historyTs: String,
            tieBreak: Seq[String] = Nil): DataFrame = {
     val spark = probe.sparkSession
-    ensureInjected(spark)
+    graft.core.GraftExtensions.requireStrategy(spark, classOf[AsOfJoinStrategy], "as-of joins")
     def fresh(df: DataFrame): DataFrame =
       df.select(df.columns.toIndexedSeq.map(c => df(c).as(c)): _*)
     val l = fresh(history).queryExecution.analyzed

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, BoundReference, InterpretedOrdering, NullsFirst, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -100,12 +100,6 @@ case class OrderedGuardExec(order: Seq[Attribute], child: SparkPlan)
 
 object OrderedGuard {
 
-  def ensureInjected(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[OrderedGuardStrategy]))
-      spark.experimental.extraStrategies = cur :+ new OrderedGuardStrategy
-  }
-
   /** Assert (and verify at runtime) that `df` is already sorted by
     * `cols` within every partition. The returned frame plans with that
     * ordering; a false claim fails the job with
@@ -113,7 +107,8 @@ object OrderedGuard {
     */
   def assertSorted(df: DataFrame, cols: Seq[String]): DataFrame = {
     val spark = df.sparkSession
-    ensureInjected(spark)
+    graft.core.GraftExtensions.requireStrategy(spark, classOf[OrderedGuardStrategy],
+      "ordering assertions")
     val plan = df.queryExecution.analyzed
     val attrs = cols.map(c => plan.output.find(_.name == c).getOrElse(
       throw new IllegalArgumentException(

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.streaming.WindowedAggs
+import graft.streaming.{Eviction, StateLogic, Stateful, WindowedAggs}
 
 /** Order-detail version carrying its dimension key (A7 state bean). */
 case class SkuAmount(id: String, skuId: String, ts: Long, amountCents: Long)
@@ -44,26 +44,17 @@ object DwsApps {
   /** DwsTradeSkuOrderWindow (SURVEY §2.5 A4+A7, §2.4 J5): upsert-aware
     * per-sku amount windows. State keyed by order-detail id emits
     * (new − last) deltas so window sums stay correct under re-emitted
-    * upserts (reference :158-201); downstream: tumbling window × sku →
+    * upserts (reference :158-201) — the A7 [[StateLogic.upsertStep]],
+    * whose (ts, amount) order resolves same-ts versions the same way
+    * in every shuffle order; downstream: tumbling window × sku →
     * Σdelta, then broadcast dim enrichment (J5) by the caller.
     */
   def skuAmountDeltas(ds: Dataset[SkuAmount]): Dataset[SkuAmountDelta] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.id)
-      .flatMapGroupsWithState[(Long, Long), SkuAmountDelta](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, rows: Iterator[SkuAmount], state: GroupState[(Long, Long)]) =>
-          var (lastTs, lastAmt) = state.getOption.getOrElse((Long.MinValue, 0L))
-          val out = rows.toSeq.sortBy(_.ts).flatMap { v =>
-            if (v.ts >= lastTs) {
-              val d = SkuAmountDelta(v.skuId, v.ts, v.amountCents - lastAmt)
-              lastTs = v.ts; lastAmt = v.amountCents
-              Some(d)
-            } else None
-          }
-          state.update((lastTs, lastAmt))
-          out.iterator
-      }
+    Stateful.keyed(ds, (_: SkuAmount).id,
+      (_: String, rows: Iterator[SkuAmount], st: Option[(Long, Long)]) =>
+        StateLogic.upsertStep(rows, st)(_.ts, _.amountCents)(
+          (v, d) => SkuAmountDelta(v.skuId, v.ts, d)))
   }
 
   /** Full sku-order window: deltas → window agg → dim enrichment. */
@@ -181,7 +172,7 @@ object DwsApps {
 
   /** DwsUserUserLoginWindow (A6 + 7-day back-flow): per-uid state emits
     * unique-user and back-flow flags (reference :83-126); window-sum
-    * downstream. Transitions are [[graft.streaming.StateLogic.loginStep]]:
+    * downstream. Transitions are [[StateLogic.loginStep]]:
     * uu emits only when the day STRICTLY advances past the stored last
     * day, so a replayed or out-of-order older day can neither re-emit
     * uu nor regress the state (the reference's equality-only compare
@@ -189,56 +180,39 @@ object DwsApps {
     */
   def loginFlags(ds: Dataset[LoginEvent], gapDays: Int = 7): Dataset[LoginFlags] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.uid)
-      .flatMapGroupsWithState[String, LoginFlags](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid, rows: Iterator[LoginEvent], state: GroupState[String]) =>
-          var last = state.getOption
-          val out = rows.toSeq.sortBy(e => (e.day, e.ts.getTime)).flatMap { e =>
-            val (uu, back, next) = graft.streaming.StateLogic.loginStep(last, e.day, gapDays)
-            last = Some(next)
-            if (uu) Some(LoginFlags(uid, 1L, if (back) 1L else 0L, e.ts)) else None
-          }
-          last.foreach(state.update)
-          out.iterator
-      }
+    Stateful.keyed(ds, (_: LoginEvent).uid, loginBatch(gapDays))
   }
 
   /** [[loginFlags]] with dormant-uid eviction (VERDICT r2 #1; see
     * graft.streaming.Stateful.firstSeenPerDayEvicting): a uid idle for
     * `idleTtlDays` of event time is dropped from the store; if it logs
-    * in again it re-counts one uu (and, past the gap, a back-flow) —
-    * the reference's own TTL trade. Total state tracks ACTIVE uids.
+    * in again it re-counts one uu, but with its last day gone it is not
+    * flagged back-flow — the reference's own TTL trade, and the reason
+    * the TTL default (30 days) sits well past the gap (7). Total state
+    * tracks ACTIVE uids.
     * Batch runs behave exactly like [[loginFlags]].
     */
   def loginFlagsEvicting(ds: Dataset[LoginEvent], gapDays: Int = 7,
                          idleTtlDays: Int = 30,
                          watermarkDelay: String = "1 second"): Dataset[LoginFlags] = {
     import ds.sparkSession.implicits._
-    val streaming = ds.isStreaming
-    val src = if (streaming) ds.withWatermark("ts", watermarkDelay) else ds
-    src.groupByKey(_.uid)
-      .flatMapGroupsWithState[String, LoginFlags](
-        OutputMode.Append,
-        if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout) {
-        (uid, rows: Iterator[LoginEvent], state: GroupState[String]) =>
-          if (streaming && state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var last = state.getOption
-            val out = rows.toSeq.sortBy(e => (e.day, e.ts.getTime)).flatMap { e =>
-              val (uu, back, next) = graft.streaming.StateLogic.loginStep(last, e.day, gapDays)
-              last = Some(next)
-              if (uu) Some(LoginFlags(uid, 1L, if (back) 1L else 0L, e.ts)) else None
-            }
-            last.foreach { d =>
-              state.update(d)
-              if (streaming) state.setTimeoutTimestamp(
-                math.max(graft.streaming.Stateful.dayExpiryMs(d, idleTtlDays),
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
+    Stateful.keyed(ds, (_: LoginEvent).uid, loginBatch(gapDays), Some(Eviction[String](
+      col("ts"), watermarkDelay, d => Stateful.dayExpiryMs(d, idleTtlDays))))
+  }
+
+  /** Per-uid login step: the uid's logins in (day, ts) order through
+    * [[StateLogic.loginStep]]; state is the last login day.
+    */
+  private def loginBatch(gapDays: Int)
+      : (String, Iterator[LoginEvent], Option[String]) => (Seq[LoginFlags], Option[String]) = {
+    (uid, rows, st) =>
+      var last = st
+      val out = rows.toSeq.sortBy(e => (e.day, e.ts.getTime)).flatMap { e =>
+        val (uu, back, next) = StateLogic.loginStep(last, e.day, gapDays)
+        last = Some(next)
+        if (uu) Some(LoginFlags(uid, 1L, if (back) 1L else 0L, e.ts)) else None
       }
+      (out, last)
   }
 
   /** Full login window: flags → global tumbling sums (A3 shape). */

@@ -87,9 +87,9 @@ private[graft] case class MorTable(dir: String, pk: Seq[String],
       override def readSchema(): StructType = dataSchema
       override def toBatch: org.apache.spark.sql.connector.read.Batch =
         throw new UnsupportedOperationException(
-          s"merge-on-read SQL reads need the MorReadRule analyzer rule — " +
-            "start the session with GraftExtensions (spark.sql.extensions=" +
-            "graft.core.GraftExtensions), or read through graft.io.MergeOnRead.read")
+          graft.core.GraftExtensions.missing(
+            "merge-on-read SQL reads need the MorReadRule analyzer rule") +
+            ", or read through graft.io.MergeOnRead.read")
     }
 
   /** SQL `INSERT INTO` = [[graft.io.MergeOnRead.merge]]: the batch

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.time.LocalDate
+import graft.model.{VisitorHit, VisitorHitFixed}
 
 /** Bounded per-key day state: the max day ever seen plus the set of
   * days within `retainDays` of it. Total size ≤ retainDays entries per
@@ -18,9 +19,16 @@ import java.time.LocalDate
   */
 case class BoundedDays(maxDay: String, recent: Set[String])
 
-/** Pure state transitions for the stateful family — factored out of
-  * the flatMapGroupsWithState closures so properties (state bound,
-  * exactness, replay monotonicity) are testable without a Spark job.
+/** is_new repair state (A8): the visitor's first-seen day ("" marks a
+  * visitor known to predate the pipeline) and the newest day seen, the
+  * idle clock of the evicting variant.
+  */
+case class VisitorDays(firstDay: String, lastDay: String)
+
+/** Pure state transitions for the stateful family — the steps that
+  * [[Stateful.keyed]] runs per key and batch, kept free of Spark so
+  * properties (state bound, exactness, replay monotonicity) are
+  * testable without a Spark job.
   */
 object StateLogic {
 
@@ -64,13 +72,62 @@ object StateLogic {
     * keys (keys seen within the TTL window) instead of all-time key
     * cardinality — the difference between O(daily actives) and
     * O(years of visitors) state at 100 TB. The Spark-side enforcement
-    * is the EventTimeTimeout in the `*Evicting` operators
-    * (Stateful/TrafficPageView/DwsApps); this pure form is what the
+    * is the event-time timeout of [[Stateful.keyed]], which every
+    * `*Evicting` operator runs through; this pure form is what the
     * properties replay.
     */
   def expireIfIdle(st: Option[BoundedDays], watermarkDay: String,
                    idleDays: Int): Option[BoundedDays] =
     st.filter(_.maxDay > minusDays(watermarkDay, idleDays))
+
+  /** One is_new repair batch for a visitor (rules at
+    * [[Stateful.isNewFix]]), in day order so batch runs are
+    * deterministic. A visitor first seen with is_new=0 predates the
+    * pipeline: its first-seen day is recorded as "", before any day.
+    */
+  def isNewFixStep(mid: String, rows: Iterator[VisitorHit],
+                   st: Option[VisitorDays])
+      : (Seq[VisitorHitFixed], Option[VisitorDays]) = {
+    val sorted = rows.toSeq.sortBy(_.day)
+    var firstDay = st.map(_.firstDay).orNull
+    val out = sorted.map { h =>
+      val fixed =
+        if (h.isNew == "1") {
+          if (firstDay == null) { firstDay = h.day; "1" }
+          else if (firstDay == h.day) "1"
+          else "0"
+        } else {
+          if (firstDay == null) firstDay = ""
+          "0"
+        }
+      VisitorHitFixed(mid, h.day, fixed)
+    }
+    val lastDay = (st.map(_.lastDay) ++ sorted.lastOption.map(_.day)).max
+    (out, Some(VisitorDays(firstDay, lastDay)))
+  }
+
+  /** One upsert-correction batch for a key (A7,
+    * DwsTradeSkuOrderWindow.processBeanStream :158-201). State is the
+    * (ts, amount) of the newest version. Versions run in (ts, amount)
+    * order, so same-ts versions resolve the same way whatever order
+    * the group iterator yields them in; each version at or after the
+    * stored ts emits `delta(v, amount − last)`, so downstream sums
+    * telescope to the newest amount. Older versions are stale and
+    * dropped.
+    */
+  def upsertStep[R, O](rows: Iterator[R], st: Option[(Long, Long)])
+                      (ts: R => Long, amount: R => Long)
+                      (delta: (R, Long) => O): (Seq[O], Option[(Long, Long)]) = {
+    var (lastTs, lastAmt) = st.getOrElse((Long.MinValue, 0L))
+    val out = rows.toSeq.sortBy(v => (ts(v), amount(v))).flatMap { v =>
+      if (ts(v) >= lastTs) {
+        val d = delta(v, amount(v) - lastAmt)
+        lastTs = ts(v); lastAmt = amount(v)
+        Some(d)
+      } else None // stale out-of-order version: ignore
+    }
+    (out, Some((lastTs, lastAmt)))
+  }
 
   /** One login-window step (DwsUserUserLoginWindow semantics with the
     * reorder guard): emit uu only when `day` strictly advances past

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One page-view row (the LogSplit pageDf contract, typed). */
 case class PageViewRow(mid: String, vc: String, ch: String, ar: String,
@@ -23,11 +22,31 @@ case class TrafficBean(mid: String, vc: String, ch: String, ar: String,
   *   window × (vc, ch, ar, is_new) → Σuv Σsv Σpv Σdur with [stt,edt).
   *
   * Reference: mapUvBean (:120-179) + keyBy (:99-106) + window/reduce
-  * (:59-97). flatMapGroupsWithState in Append mode composes with the
+  * (:59-97). The per-mid state runs through [[Stateful.keyed]]
+  * (Append-mode group state), which composes with the
   * downstream windowed aggregation — one state shuffle on mid, one agg
   * shuffle on the window keys, both keyed so they scale horizontally.
   */
 object TrafficPageView {
+
+  /** Per-mid uv/sv step: ts-ascending processing ⇒ days arrive
+    * non-decreasing within the batch, so the retain window only
+    * matters across batches.
+    */
+  private val annotateBatch: (String, Iterator[PageViewRow], Option[BoundedDays]) =>
+      (Seq[TrafficBean], Option[BoundedDays]) = { (mid, rows, st0) =>
+    var st = st0
+    val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
+    fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
+    val out = rows.toSeq.sortBy(_.ts.getTime).map { r =>
+      val (emit, next) = StateLogic.firstSeenStep(st, fmt.format(r.ts))
+      st = Some(next)
+      val uv = if (emit) 1L else 0L
+      val sv = if (r.lastPageId == null) 1L else 0L
+      TrafficBean(mid, r.vc, r.ch, r.ar, r.isNew, uv, sv, 1L, r.durMs, r.ts)
+    }
+    (out, st)
+  }
 
   /** Per-mid uv/sv flags. State is [[BoundedDays]] (max day + ≤7-day
     * recent-set, see [[StateLogic.firstSeenStep]]) — bounded per key
@@ -35,26 +54,7 @@ object TrafficPageView {
     */
   def annotate(pages: Dataset[PageViewRow]): Dataset[TrafficBean] = {
     import pages.sparkSession.implicits._
-    pages.groupByKey(_.mid)
-      .flatMapGroupsWithState[BoundedDays, TrafficBean](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (mid: String, rows: Iterator[PageViewRow], state: GroupState[BoundedDays]) =>
-          var st = state.getOption
-          val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-          fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-          // ts-ascending processing ⇒ days arrive non-decreasing within
-          // the batch, so the retain window only matters across batches
-          val out = rows.toSeq.sortBy(_.ts.getTime).map { r =>
-            val day = fmt.format(r.ts)
-            val (emit, next) = StateLogic.firstSeenStep(st, day)
-            st = Some(next)
-            val uv = if (emit) 1L else 0L
-            val sv = if (r.lastPageId == null) 1L else 0L
-            TrafficBean(mid, r.vc, r.ch, r.ar, r.isNew, uv, sv, 1L, r.durMs, r.ts)
-          }
-          st.foreach(state.update)
-          out.iterator
-      }
+    Stateful.keyed(pages, (_: PageViewRow).mid, annotateBatch)
   }
 
   /** [[annotate]] with dormant-mid eviction (VERDICT r2 #1; see
@@ -66,35 +66,8 @@ object TrafficPageView {
   def annotateEvicting(pages: Dataset[PageViewRow], idleTtlDays: Int = 7,
                        watermarkDelay: String = "1 second"): Dataset[TrafficBean] = {
     import pages.sparkSession.implicits._
-    val streaming = pages.isStreaming
-    val src = if (streaming) pages.withWatermark("ts", watermarkDelay) else pages
-    src.groupByKey(_.mid)
-      .flatMapGroupsWithState[BoundedDays, TrafficBean](
-        OutputMode.Append,
-        if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout) {
-        (mid: String, rows: Iterator[PageViewRow], state: GroupState[BoundedDays]) =>
-          if (streaming && state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption
-            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            val out = rows.toSeq.sortBy(_.ts.getTime).map { r =>
-              val day = fmt.format(r.ts)
-              val (emit, next) = StateLogic.firstSeenStep(st, day)
-              st = Some(next)
-              val uv = if (emit) 1L else 0L
-              val sv = if (r.lastPageId == null) 1L else 0L
-              TrafficBean(mid, r.vc, r.ch, r.ar, r.isNew, uv, sv, 1L, r.durMs, r.ts)
-            }
-            st.foreach { s =>
-              state.update(s)
-              if (streaming) state.setTimeoutTimestamp(
-                math.max(Stateful.dayExpiryMs(s.maxDay, idleTtlDays),
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }
+    Stateful.keyed(pages, (_: PageViewRow).mid, annotateBatch, Some(Eviction[BoundedDays](
+      col("ts"), watermarkDelay, s => Stateful.dayExpiryMs(s.maxDay, idleTtlDays))))
   }
 
   /** Full app: annotate → windowed multi-metric aggregate. */

@@ -1,5 +1,6 @@
 package graft.tools
 
+import scala.util.chaining._
 import org.apache.spark.sql.SparkSession
 import graft.ops.TpcH
 
@@ -14,8 +15,7 @@ object ExplainQ18 {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .pipe(graft.core.GraftSession.engineConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm-up

@@ -1,5 +1,6 @@
 package graft.tools
 
+import scala.util.chaining._
 import org.apache.spark.sql.SparkSession
 
 /** Diagnostic: print the normalized final physical plan of named
@@ -14,8 +15,7 @@ object PlanDump {
       .master("local[16]")
       .config("spark.sql.shuffle.partitions", "16")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .pipe(graft.core.GraftSession.engineConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>

@@ -1,4 +1,5 @@
 package graft.tools
+import scala.util.chaining._
 import org.apache.spark.sql.SparkSession
 object ShaFlake {
   def main(args: Array[String]): Unit = {
@@ -7,8 +8,7 @@ object ShaFlake {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .pipe(graft.core.GraftSession.engineConfs).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = graft.SparkEntry.queries(name)
     val seen = scala.collection.mutable.Map[String, String]()

@@ -1,5 +1,6 @@
 package graft.tools
 
+import scala.util.chaining._
 import org.apache.spark.sql.SparkSession
 
 /** Print the job-free health snapshot of one or more tables:
@@ -13,7 +14,7 @@ import org.apache.spark.sql.SparkSession
 object TableDoctor {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .pipe(graft.core.GraftSession.engineConfs).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach {
       case p if p.startsWith("mor:") =>

@@ -1,11 +1,11 @@
 package graft.tools
+import scala.util.chaining._
 import org.apache.spark.sql.SparkSession
 object ZProbe {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .pipe(graft.core.GraftSession.engineConfs).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
       val root = graft.ops.TpcH.zonesLineitemEnsure(spark, sf)

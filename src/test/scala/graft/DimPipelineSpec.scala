@@ -57,7 +57,6 @@ class DimPipelineSpec extends SparkSpec {
     // it broadcast even with size-estimate broadcast disabled — the
     // manifest scan's leaf paths are FILES under the table dir, so this
     // also pins DimRegistry's ancestor matching
-    graft.core.DimBroadcast.ensureInjected(spark)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {

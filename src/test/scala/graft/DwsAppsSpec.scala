@@ -60,6 +60,20 @@ class DwsAppsSpec extends SparkSpec {
     assert(bySku == Map("sku1" -> 1800L, "sku2" -> 700L))
   }
 
+  test("skuOrderWindow: two same-ts versions of an id give one window sum in either order") {
+    val skuDim = Seq(("sku1", "phone")).toDF("skuId", "sku_name")
+    val t = ts("2024-01-01 00:00:01").getTime
+    val v1 = SkuAmount("d1", "sku1", t, 1000L)
+    val v2 = SkuAmount("d1", "sku1", t, 1300L)
+    // one input partition: the group iterator yields the versions in
+    // exactly this order, so only the step's own order decides
+    def windowSum(vs: Seq[SkuAmount]): Set[(String, Long)] =
+      DwsApps.skuOrderWindow(vs.toDS().coalesce(1), skuDim)
+        .select("skuId", "order_amount_cents").as[(String, Long)].collect().toSet
+    assert(windowSum(Seq(v1, v2)) == Set(("sku1", 1300L)))
+    assert(windowSum(Seq(v2, v1)) == Set(("sku1", 1300L)))
+  }
+
   test("skuOrderWindow streaming: windowed sums equal latest amounts, dims joined") {
     implicit val sqlCtx = spark.sqlContext
     val skuDim = Seq(("sku1", "phone"), ("sku2", "book")).toDF("skuId", "sku_name")

@@ -52,8 +52,7 @@ class ExtensionsSpec extends SparkSpec {
   test("DimBroadcastRule: registered dims broadcast when size estimates can't; " +
        "unregistered tables and explicit hints are untouched") {
     import org.apache.spark.sql.functions.{broadcast, col}
-    import graft.core.{DimBroadcast, DimRegistry}
-    DimBroadcast.ensureInjected(spark)
+    import graft.core.DimRegistry
     val nation = graft.io.Tables.nation(spark, sf)
     val customer = graft.io.Tables.customer(spark, sf)
     def planOf(df: org.apache.spark.sql.DataFrame): String = {
@@ -84,5 +83,23 @@ class ExtensionsSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (10L * 1024 * 1024).toString)
       DimRegistry.unregister(spark, s"$sf/nation.parquet")
     }
+  }
+
+  test("planner strategies install once through GraftExtensions; no head mutates " +
+       "the session's experimental hooks") {
+    import graft.plans.{AsOfJoinStrategy, OrderedGuardStrategy}
+    val strategies = spark.sessionState.planner.strategies
+    assert(strategies.exists(_.isInstanceOf[AsOfJoinStrategy]))
+    assert(strategies.exists(_.isInstanceOf[OrderedGuardStrategy]))
+    Seq("j_asof_join", "j_asof_join_exec", "j5_sku_chain_auto", "mv_rollup_rewrite")
+      .foreach(h => SparkEntry.queries(h)(spark, sf).queryExecution.toRdd.count())
+    assert(spark.experimental.extraStrategies.isEmpty)
+    assert(spark.experimental.extraOptimizations.isEmpty)
+  }
+
+  test("a session whose planner lacks a graft strategy is refused up front") {
+    val e = intercept[UnsupportedOperationException](
+      graft.core.GraftExtensions.requireStrategy(spark, classOf[String], "string plans"))
+    assert(e.getMessage.contains("spark.sql.extensions=graft.core.GraftExtensions"), e.getMessage)
   }
 }

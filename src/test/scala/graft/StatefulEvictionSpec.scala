@@ -192,4 +192,56 @@ class StatefulEvictionSpec extends SparkSpec {
       assert(m1.count(_.isNew == "1") == 2)
     } finally q.stop()
   }
+
+  test("evicting annotate drops a dormant mid; a returning mid counts one uv") {
+    import graft.streaming.{PageViewRow, TrafficBean, TrafficPageView}
+    implicit val sqlCtx = spark.sqlContext
+    def pv(mid: String, at: String) =
+      PageViewRow(mid, "v1", "ch", "ar", "1", null, 10L, java.sql.Timestamp.valueOf(at))
+    val ms = MemoryStream[PageViewRow]
+    val q = TrafficPageView.annotateEvicting(ms.toDS(), idleTtlDays = 7)
+      .writeStream.format("memory").queryName("tpv_evict").outputMode("append").start()
+    try {
+      ms.addData(pv("m1", "2024-01-01 10:00:00"), pv("m2", "2024-01-01 10:00:00"))
+      q.processAllAvailable()
+      ms.addData(pv("m2", "2024-01-20 10:00:00")) // watermark jumps past m1's TTL
+      q.processAllAvailable()
+      ms.addData(pv("m3", "2024-01-21 10:00:00"))
+      q.processAllAvailable()
+      assert(stateRows(q) == 2, "dormant m1 must be evicted")
+      ms.addData(pv("m1", "2024-01-22 10:00:00"), pv("m1", "2024-01-22 11:00:00"))
+      q.processAllAvailable()
+      assert(stateRows(q) == 3, "returned mid re-enters the store")
+      val m1 = spark.table("tpv_evict").as[TrafficBean].collect().filter(_.mid == "m1").toSeq
+      assert(m1.map(_.uvCt).sum == 2 && m1.map(_.pvCt).sum == 3, s"$m1")
+    } finally q.stop()
+  }
+
+  test("evicting loginFlags drops a dormant uid; a returning uid counts one uu, " +
+       "with no back-flow since its last day left with the state") {
+    import graft.rtdw.{DwsApps, LoginEvent, LoginFlags}
+    implicit val sqlCtx = spark.sqlContext
+    def login(uid: String, day: String) =
+      LoginEvent(uid, day, java.sql.Timestamp.valueOf(s"$day 10:00:00"))
+    val ms = MemoryStream[LoginEvent]
+    val q = DwsApps.loginFlagsEvicting(ms.toDS(), gapDays = 7, idleTtlDays = 30)
+      .writeStream.format("memory").queryName("login_evict").outputMode("append").start()
+    try {
+      ms.addData(login("a", "2024-01-01"), login("b", "2024-01-01"))
+      q.processAllAvailable()
+      ms.addData(login("b", "2024-02-15")) // watermark jumps past a's 30-day TTL
+      q.processAllAvailable()
+      ms.addData(login("c", "2024-02-16"))
+      q.processAllAvailable()
+      assert(stateRows(q) == 2, "dormant uid a must be evicted")
+      ms.addData(login("a", "2024-02-17"), login("a", "2024-02-17"))
+      q.processAllAvailable()
+      assert(stateRows(q) == 3, "returned uid re-enters the store")
+      val rows = spark.table("login_evict").as[LoginFlags].collect().toSeq
+      val a = rows.filter(_.uid == "a")
+      assert(a.map(_.uuCt).sum == 2 && a.map(_.backCt).sum == 0, s"$a")
+      // b stayed in the store across its 45-day gap: a back-flow
+      assert(rows.filter(_.uid == "b").map(_.backCt).sum == 1, s"$rows")
+    } finally q.stop()
+  }
 }

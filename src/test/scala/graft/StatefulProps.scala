@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.chaining._
 import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import graft.model._
@@ -10,7 +11,8 @@ import graft.streaming.{BoundedDays, StateLogic, Stateful}
   */
 object StatefulProps extends Properties("Stateful") {
 
-  // Must mirror SparkSpec's builder INCLUDING extensions: suites share
+  // Built through GraftSession.engineConfs like SparkSpec's session,
+  // so it carries the same extensions and engine confs: suites share
   // one JVM-wide session via getOrCreate(), and whichever suite runs
   // first fixes the extension set for everyone (withExtensions on a
   // builder is ignored when an existing session is returned). A bare
@@ -18,10 +20,8 @@ object StatefulProps extends Properties("Stateful") {
   // whole run and failed MvSpec's rewrite assertions order-dependently.
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
-    .withExtensions(new graft.core.GraftExtensions)
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+    .pipe(graft.core.GraftSession.engineConfs)
     .getOrCreate()
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =

@@ -18,6 +18,26 @@ class StatefulSpec extends SparkSpec {
       FirstSeen("u2", "2024-01-01")))
   }
 
+  test("streaming firstSeenPerDay plans no watermark and no timeout; its evicting twin both") {
+    implicit val sqlCtx = spark.sqlContext
+    def planOf(ds: org.apache.spark.sql.Dataset[FirstSeen], name: String): String = {
+      val q = ds.writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.executedPlan.toString
+      } finally q.stop()
+    }
+    val ms = MemoryStream[KeyDay]
+    ms.addData(KeyDay("u1", "2024-01-01"))
+    val plain = planOf(Stateful.firstSeenPerDay(ms.toDS()), "fsd_plan")
+    assert(plain.contains("NoTimeout") && !plain.contains("EventTimeWatermark") &&
+      !plain.contains("__event_time"), plain)
+    val evicting = planOf(Stateful.firstSeenPerDayEvicting(ms.toDS()), "fsd_plan_evict")
+    assert(evicting.contains("EventTimeTimeout") && evicting.contains("EventTimeWatermark"),
+      evicting)
+  }
+
   test("firstSeenPerDay keeps state across micro-batches (streaming)") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[KeyDay]
