@@ -27,7 +27,19 @@ object GraftSession {
     *     a join whose keys are a SUPERSET of the partition keys reuse
     *     the children's placement (the default-true co-partition check
     *     would demand an exchange exactly where the bucket layout
-    *     already co-locates).
+    *     already co-locates);
+    *   - the local `file:` scheme through [[graft.io.NioLocalFileSystem]]
+    *     (the `FileSystem` API) and [[graft.io.NioLocalFs]] (the
+    *     `FileContext` API of Spark's checkpoint and state-store file
+    *     managers). Without libhadoop, stock Hadoop starts a subprocess
+    *     for file metadata: `chmod` after every create and mkdir,
+    *     `readlink` for every link status (`FileContext.rename` takes one
+    *     of its source and one of its target), and `ls -ld` when a
+    *     status's permission is read (`listFiles` reads it for each
+    *     file). That is every offset, commit and state-store file of
+    *     every trigger and every table commit. These calls now run
+    *     through `java.nio` and start no process; files, `.crc`
+    *     sidecars, permission bits and rename semantics are as before.
     */
   def engineConfs(b: SparkSession.Builder): SparkSession.Builder =
     b.withExtensions(new GraftExtensions) // graft_* SQL functions +
@@ -61,6 +73,8 @@ object GraftSession {
       // session pays.
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
 
   def builder(appName: String = "graft", cores: String = "*"): SparkSession.Builder =
     engineConfs(SparkSession.builder()

@@ -57,9 +57,18 @@ object PlanCanon {
       // counts: a lost prune there is a regression the hash must see;
       // serving-read narrowing is pinned by UpsertSpec/ZonesSpec file
       // assertions instead.
+      //
+      // Their paths are absolute (Hadoop qualifies the relative table
+      // dir against the working directory), and Spark cuts the Location
+      // field at a fixed width, so how much of the repo-relative part
+      // shows depends on the length of the checkout's path (seen live:
+      // mv_rollup_rewrite hashed three ways from three checkouts). The
+      // path list becomes `target/...`: the scan's columns and schema
+      // name the table.
       val l =
         if (l0.contains("InMemoryFileIndex(") && l0.contains("target/"))
           l0.replaceAll("InMemoryFileIndex\\(\\d+ paths\\)", "InMemoryFileIndex( paths)")
+            .replaceAll("(Location: \\w+\\(\\d* paths\\)\\[).*?(?=, PartitionFilters: |$)", "$1target/...]")
         else l0
       if (l.contains("HashedRelationBroadcastMode") || l.contains("BroadcastExchange"))
         // ordinals AND nullability of broadcast-mode keys are physical

@@ -38,6 +38,22 @@ class PlanCanonSpec extends AnyFunSuite {
       "source-scan file counts must stay visible to the hash")
   }
 
+  test("a target/ scan hashes the same from checkouts at paths of different lengths") {
+    // Spark abbreviates each scan metadata field to spark.sql.maxMetadataStringLength
+    // (100) characters, so the visible part of the table's path shrinks as the root grows
+    def render(root: String, schema: String = "struct<k:bigint,n:bigint>") =
+      "FileScan parquet [k#1L,n#2L] Batched: true, DataFilters: [], Format: Parquet, Location: " +
+        org.apache.commons.lang3.StringUtils.abbreviate(
+          s"InMemoryFileIndex(1 paths)[file:$root/target/mv/rollup_root_testdata_sf0.01/__gen=3]", 100) +
+        s", PartitionFilters: [], PushedFilters: [], ReadSchema: $schema"
+    val short = render("/home/ci/graft")
+    val long = render("/srv/builds/a-checkout-at-a-longer-path/graft")
+    assert(short != long, "the two renderings differ in the path")
+    assert(PlanCanon.sha(short) == PlanCanon.sha(long))
+    assert(PlanCanon.sha(short) != PlanCanon.sha(render("/home/ci/graft", "struct<k:bigint>")),
+      "the scan's schema stays visible to the hash")
+  }
+
   test("run-varying ids normalize; structure does not") {
     val p1 = "*(3) HashAggregate(keys=[k#12], functions=[sum(v#13)])"
     val p2 = "*(5) HashAggregate(keys=[k#99], functions=[sum(v#101)])"
