@@ -15,7 +15,7 @@ object GraftSession {
 
   /** Engine confs every entry point's session must share — applied by
     * [[builder]] and by the standalone mains' own builders
-    * ([[graft.Bench]], [[graft.Verify]], [[graft.Smoke]], probes,
+    * ([[graft.Bench]], [[graft.Verify]], [[graft.Smoke]], the tools,
     * SparkSpec) via this ONE decorator so a new conf cannot drift
     * between entry points:
     *   - UTC-pinned session time (the reference hardcodes GMT+8; we

@@ -340,11 +340,11 @@ object MergeOnRead {
     * This matters for a batch first seen through the change-feed scan:
     * its first readDeltaBatch comes a trigger later, from the next
     * fold's PRE lookup, on the fold's critical path. Inference remains
-    * only for batches that predate the record.
+    * only for batches that predate the record. The memo is an LRU of
+    * [[Lru.MemoEntries]] entries; [[dropTable]] drops the table's.
     */
   private val deltaSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Long, Int), org.apache.spark.sql.types.StructType]
+    new Lru[(String, Long, Long, Int), org.apache.spark.sql.types.StructType](Lru.MemoEntries)
 
   /** Name of the schema record inside a committed delta batch dir. */
   private[graft] val DeltaSchemaFile = "_schema.json"
@@ -353,6 +353,10 @@ object MergeOnRead {
     * inference fallback with it).
     */
   private[graft] def clearDeltaSchemaMemo(): Unit = deltaSchemaCache.clear()
+
+  /** Delta-batch schemas the memo holds for the table at `dir`. */
+  private[graft] def deltaSchemasMemoized(dir: String): Int =
+    deltaSchemaCache.count(k => Upsert.isUnder(dir)(k._1))
 
   private[graft] def readDeltaBatch(spark: SparkSession, p: String): DataFrame = {
     val path = new Path(p)
@@ -364,7 +368,7 @@ object MergeOnRead {
     if (files.isEmpty) return spark.read.parquet(p) // degenerate: let Spark report
     val key = (p, files.map(_.getLen).sum,
       files.map(_.getModificationTime).max, files.length)
-    val schema = deltaSchemaCache.computeIfAbsent(key, _ =>
+    val schema = deltaSchemaCache.getOrElseUpdate(key)(
       listed.find(_.getPath.getName == DeltaSchemaFile)
         .flatMap(s => FsOps.readRawOpt(fs, s.getPath))
         .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
@@ -1881,6 +1885,8 @@ object MergeOnRead {
     if (!isMorRoot(spark, d)) return false
     Upsert.withWriterLease(spark, d) {
       val root = new Path(d)
+      Upsert.forgetTable(d)
+      deltaSchemaCache.removeKeys(k => Upsert.isUnder(d)(k._1))
       FsOps.fs(spark, root).delete(root, true)
     }
   }

@@ -21,7 +21,8 @@ object Tables {
     * directory listing plus a parquet footer read on the driver,
     * ~20–50 ms — and a bench pass constructs each head twice, most
     * heads touching 2–6 tables (measured 18.6 s of the 52 s board
-    * total spent in query CONSTRUCTION, ProfileQ r15). The schema of
+    * total spent in query CONSTRUCTION, OPTIMIZATION_r15.md; the
+    * `head.build_s` of `tools.Profile` measures it). The schema of
     * an immutable source file is pure metadata, so it is cached keyed
     * on (path, size, mtime): any regeneration of the testdata changes
     * the key and re-infers; nothing row-valued is ever memoized (the

@@ -47,7 +47,8 @@ import org.apache.spark.sql.functions._
   * dim-maintenance case this layout serves. A firehose of random-key
   * fact upserts touches every bucket per batch and needs merge-on-read
   * instead — that is [[MergeOnRead]] (O(batch) delta appends resolved
-  * at read; ~70× cheaper per firehose batch in ScaleProbe). With
+  * at read; far cheaper per firehose batch: PROBES.md, "Write paths",
+  * the `events` row). With
   * `bloom=true` a second skipping level kicks in BELOW bucket pruning:
   * per-file key Bloom sidecars ([[Blooms]]) let a point merge read only
   * the files that might hold its keys; every other file is carried into
@@ -193,20 +194,39 @@ object Upsert {
     * we have parsed before (segment reads included, which is where the
     * savings multiply for segmented manifests). Nothing row-valued is
     * cached; every query still scans the parquet the manifest names.
+    * The memo is an LRU of [[Lru.MemoEntries]] entries: an evicted
+    * generation is re-read and re-parsed on its next use.
     */
   private val manifestMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Long), Manifest]
+    new Lru[(String, Long, Long, Long), Manifest](Lru.MemoEntries)
 
   private def parseMemo(spark: SparkSession, dir: String,
                         st: org.apache.hadoop.fs.FileStatus,
                         gen: Long): Option[Manifest] = {
     val key = (dir, gen, st.getLen, st.getModificationTime)
-    Option(manifestMemo.get(key)).orElse {
+    manifestMemo.get(key).orElse {
       val parsed = FsOps.readTextOpt(spark, st.getPath)
         .map(parse(spark, dir, gen, _))
       parsed.foreach(manifestMemo.put(key, _))
       parsed
     }
+  }
+
+  /** Parsed manifests the memo holds for tables at or under `dir`. */
+  private[graft] def manifestsMemoized(dir: String): Int =
+    manifestMemo.count(k => isUnder(dir)(k._1))
+
+  /** Whether path `p`, qualified or not, is `dir` or lies under it. */
+  private[io] def isUnder(dir: String)(p: String): Boolean = {
+    val root = new Path(dir).toUri.getPath.stripSuffix("/")
+    val q = new Path(p).toUri.getPath
+    q == root || q.startsWith(root + "/")
+  }
+
+  /** Drop every memoized manifest and layout of the table at `dir`. */
+  private[io] def forgetTable(dir: String): Unit = {
+    manifestMemo.removeKeys(k => isUnder(dir)(k._1))
+    layoutCache.removeKeys(k => isUnder(dir)(k._1))
   }
 
   /** The newest committed snapshot, or None for a missing/empty table.
@@ -1021,11 +1041,7 @@ object Upsert {
   // a sound cache — without it every DataFrame read loads the layout
   // twice (TableProvider.inferSchema then getTable), and a SQL query
   // through the catalog a third time
-  private val layoutCache =
-    new java.util.LinkedHashMap[(String, Long), BucketLayout](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), BucketLayout]): Boolean = size > 64
-    }
+  private val layoutCache = new Lru[(String, Long), BucketLayout](64)
 
   private[graft] def bucketLayout(spark: SparkSession, dir: String,
                                   gen: Option[Long] = None): BucketLayout = {
@@ -1034,7 +1050,7 @@ object Upsert {
       .orElse(currentManifest(spark, dir)).getOrElse(
         throw new NoTableException(s"no committed manifest under $dir"))
     val key = (new Path(dir).toString, m.gen)
-    layoutCache.synchronized(Option(layoutCache.get(key))).getOrElse {
+    layoutCache.get(key).getOrElse {
       // declared (session-free) schema: the layout is CACHED across
       // sessions and serves metadata surfaces too — the id-read gate
       // fires where a scan is built (UpsertBucketTable.newScanBuilder)
@@ -1067,7 +1083,7 @@ object Upsert {
           new Path(abs(dir, rel)).toString -> n
         }, sortedBy, sortedGens,
         needsIdRead = needsIdRead(m), renamedFrom = renamedFromOf(m))
-      layoutCache.synchronized(layoutCache.put(key, l))
+      layoutCache.put(key, l)
       l
     }
   }
@@ -2852,13 +2868,8 @@ object Upsert {
       if (currentManifest(spark, dir).isEmpty) false
       else {
         val root = new Path(dir)
-        val fs = FsOps.fs(spark, root)
-        layoutCache.synchronized {
-          val prefix = root.toString
-          val it = layoutCache.keySet.iterator
-          while (it.hasNext) if (it.next()._1 == prefix) it.remove()
-        }
-        fs.delete(root, true)
+        forgetTable(dir)
+        FsOps.fs(spark, root).delete(root, true)
       }
     }
   }

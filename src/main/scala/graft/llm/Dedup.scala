@@ -176,8 +176,8 @@ object Dedup {
     ngramJaccardDf(Tables.documents(spark, sfDir), threshold, dfCap)
 
   /** [[ngramJaccard]] over an arbitrary (doc_id, text) DataFrame — the
-    * form ScaleProbe drives with synthetic corpora to measure that
-    * candidate volume stays linear in corpus size (VERDICT r3 #6).
+    * form the synthetic-corpus probes measured candidate volume with:
+    * linear in corpus size (PROBES.md, "Dedup / ANN", the `dedup` row).
     * threshold=0 returns the RAW candidate set (every shared-shingle
     * pair the inverted index generates).
     */
@@ -535,9 +535,9 @@ object Dedup {
     val index = graft.io.Upsert.readIfExists(spark, sigDir)
     // the banded projection is maintained ALONGSIDE the signatures (it
     // is deterministic per doc), so the per-batch probe never
-    // re-explodes the historical index — the shape the ScaleProbe
-    // ingest numbers show is the only one that stays fast as the
-    // corpus grows
+    // re-explodes the historical index — the shape the incremental
+    // ingest figures show is the only one that stays fast as the
+    // corpus grows (PROBES.md, "Dedup / ANN", the `ingest` row)
     val indexBands = graft.io.Upsert.readIfExists(spark, bandsDir)
       .map(_.select(col("doc_id"), col("band"), col("band_hash")))
     val (cands, batchCaches) = index match {

@@ -53,8 +53,9 @@ import graft.io.{ChangeFeed, Upsert}
   * batch size whatever the key distribution or base size (the CoW
   * default rewrites every touched bucket per epoch: at a random-key
   * firehose that is O(table) per micro-batch and the pipeline falls
-  * behind its own commit cost; the repo's own ScaleProbe measured the
-  * delta append 187× cheaper at a 5M base, growing with base size).
+  * behind its own commit cost; the delta append measured 187× cheaper
+  * at a 5M base, growing with base size: PROBES.md, "Write paths", the
+  * `events` and `sinkmor` rows).
   * Reads resolve through [[graft.io.MergeOnRead.read]] / the SQL
   * catalog; [[graft.io.Maintenance.runMor]] folds the delta backlog
   * out of band (the sink retries briefly when maintenance holds the

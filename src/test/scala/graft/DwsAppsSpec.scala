@@ -149,23 +149,4 @@ class DwsAppsSpec extends SparkSpec {
       .as[(String, String, Long)].collect().toSet
     assert(out == Set(("p1", "Beijing", 1L), ("p2", "Shanghai", 1L)))
   }
-
-  test("saltedSum equals plain sum (determinism + correctness)") {
-    val ev = graft.io.Tables.events(spark, sf)
-    val plain = ev.groupBy(col("event_type")).agg(sum(col("event_id")).as("total"))
-      .as[(String, Long)].collect().toMap
-    val salted = graft.ops.Skew.saltedSum(ev, col("event_type"), col("event_id"), 16,
-      col("event_id"))
-      .as[(String, Long)].collect().toMap
-    assert(salted == plain)
-  }
-
-  test("saltedJoin equals plain join") {
-    val ev = graft.io.Tables.events(spark, sf).select("event_id", "event_type", "user_id")
-    val dim = Seq(("click", "c"), ("view", "v"), ("purchase", "p"),
-      ("signup", "s"), ("error", "e")).toDF("event_type", "code")
-    val plain = ev.join(dim, Seq("event_type")).count()
-    val salted = graft.ops.Skew.saltedJoin(ev, dim, "event_type", col("event_id"), 8).count()
-    assert(salted == plain)
-  }
 }

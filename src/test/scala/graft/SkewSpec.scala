@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
-import graft.ops.Skew
 
 /** The two skew paths that matter at 100 TB, both proven to ENGAGE:
-  * AQE's runtime skew-join split (for shuffled joins) and deterministic
-  * salting (for aggregation keys and broadcast-ineligible dims).
+  * AQE's runtime skew-join split (for shuffled joins) and the salted
+  * hot-key guard of the pair self-join (`Dedup.skewGuardedEquiJoin`).
   */
 class SkewSpec extends SparkSpec {
   import spark.implicits._
@@ -44,40 +43,6 @@ class SkewSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-  }
-
-  test("salted two-phase top-N rows per key equals the naive window on a hot key") {
-    // 40k rows, 60% on one user: the naive window sorts 24k rows in ONE
-    // task; the salted form splits that sort across 8 slices.
-    val ev = spark.range(40000L).select(
-      when(pmod(col("id"), lit(5)) < 3, lit(7L)).otherwise(pmod(col("id"), lit(100L))).as("user_id"),
-      col("id").as("event_id"),
-      pmod(xxhash64(col("id")), lit(1000L)).as("score"))
-    val order = Seq(col("score").desc, col("event_id").asc) // total per key
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(order: _*)
-    val naive = ev.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val salted = Skew.topNRowsPerKey(ev, Seq("user_id"), order,
-        saltFrom = col("event_id"), buckets = 8, n = 3)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(naive.nonEmpty && salted == naive)
-  }
-
-  test("salted join equals plain join on a hot-keyed fact") {
-    val fact = spark.range(5000L).select(
-      when(pmod(col("id"), lit(2)) === 0, lit("HOT"))
-        .otherwise(concat(lit("k"), pmod(col("id"), lit(50)))).as("k"),
-      col("id").as("v"))
-    val dim = (0L until 50L).map(i => (s"k$i", s"name$i")).toDF("k", "name")
-      .union(Seq(("HOT", "hotname")).toDF("k", "name"))
-    val plain = fact.join(dim, "k").groupBy("k").agg(sum("v").as("s"), count(lit(1)).as("c"))
-      .as[(String, Long, Long)].collect().toSet
-    val salted = Skew.saltedJoin(fact, dim, "k", col("v"), 8)
-      .groupBy("k").agg(sum("v").as("s"), count(lit(1)).as("c"))
-      .as[(String, Long, Long)].collect().toSet
-    assert(salted == plain)
   }
 
   test("pair self-join skew guard: hot keys take the salted path, pair set identical (r16)") {

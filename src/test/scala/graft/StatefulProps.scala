@@ -59,19 +59,6 @@ object StatefulProps extends Properties("Stateful") {
         .forall { case (_, hits) => hits.map(_.day).distinct.size <= 1 }
     }
 
-  property("salted aggregation equals plain aggregation") =
-    Prop.forAll(Gen.nonEmptyListOf(Gen.zip(keyGen, Gen.choose(-1000L, 1000L)))) { rows =>
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      val df = rows.toDF("k", "v").withColumn("rid",
-        monotonically_increasing_id())
-      val plain = df.groupBy(col("k")).agg(sum(col("v")).as("total"))
-        .as[(String, Long)].collect().toMap
-      val salted = graft.ops.Skew.saltedSum(df, col("k"), col("rid"), 8, col("v"))
-        .as[(String, Long)].collect().toMap
-      salted == plain
-    }
-
   property("upsertDeltas window-sum equals latest-value sum (A7 contract)") =
     Prop.forAll(Gen.nonEmptyListOf(Gen.zip(keyGen, Gen.choose(0L, 9L), Gen.choose(0L, 500L)))) { evs =>
       import spark.implicits._
