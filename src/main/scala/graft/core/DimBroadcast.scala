@@ -35,37 +35,16 @@ object DimRegistry {
     * declaration only drops the broadcast hint (AQE still decides from
     * runtime sizes), never changes results.
     */
-  private val bySession =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[String]]()
-  private val touched =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private val tick = new java.util.concurrent.atomic.AtomicLong()
-  private val MaxSessions = 128
+  /** Registered sessions kept, here and in [[MvRegistry]]. */
+  private[graft] val MaxSessions = 128
+  private val bySession = new graft.io.Lru[String, java.util.Set[String]](MaxSessions)
 
-  private def setFor(spark: SparkSession): java.util.Set[String] = {
-    val id = org.apache.spark.sql.graft.Bridge.sessionId(spark)
-    touched.put(id, tick.incrementAndGet())
-    val s = bySession.computeIfAbsent(id,
-      _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
-    if (bySession.size > MaxSessions) evictLru()
-    s
-  }
+  private def setFor(spark: SparkSession): java.util.Set[String] =
+    bySession.getOrElseUpdate(org.apache.spark.sql.graft.Bridge.sessionId(spark))(
+      java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
 
-  private def existing(spark: SparkSession): Option[java.util.Set[String]] = {
-    val id = org.apache.spark.sql.graft.Bridge.sessionId(spark)
-    val s = bySession.get(id)
-    if (s != null) touched.put(id, tick.incrementAndGet())
-    Option(s)
-  }
-
-  private def evictLru(): Unit = this.synchronized {
-    import scala.jdk.CollectionConverters._
-    while (bySession.size > MaxSessions) {
-      val eldest = bySession.keySet.asScala
-        .minBy(id => Option(touched.get(id)).map(_.longValue).getOrElse(0L))
-      bySession.remove(eldest); touched.remove(eldest)
-    }
-  }
+  private def existing(spark: SparkSession): Option[java.util.Set[String]] =
+    bySession.get(org.apache.spark.sql.graft.Bridge.sessionId(spark))
 
   /** Normalize to the URI path component so `file:/x`, `file:///x`
     * and `/x` all name the same table.

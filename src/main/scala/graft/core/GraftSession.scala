@@ -14,10 +14,10 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Engine confs every entry point's session must share — applied by
-    * [[builder]] and by the standalone mains' own builders
-    * ([[graft.Bench]], [[graft.Verify]], [[graft.Smoke]], the tools,
-    * SparkSpec) via this ONE decorator so a new conf cannot drift
-    * between entry points:
+    * [[benchBuilder]] and by the standalone mains' own builders
+    * ([[graft.Bench]], [[graft.Verify]], [[graft.Smoke]], SparkSpec)
+    * via this ONE decorator so a new conf cannot drift between entry
+    * points:
     *   - UTC-pinned session time (the reference hardcodes GMT+8; we
     *     pin so day-boundary state semantics are reproducible);
     *   - storage-partitioned joins over the Upsert DSv2 reader
@@ -72,23 +72,56 @@ object GraftSession {
       // child session, as the j_sql_rename head does) and only that
       // session pays.
       .config("spark.sql.session.timeZone", "UTC")
+      // parquet TIMESTAMP(NANOS) reads as raw nanos (LongType) instead
+      // of failing analysis; Tables.events converts it. Set here, not by
+      // the reader: a conf flipped mid-session re-keys every source
+      // schema inferred before it
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
 
-  def builder(appName: String = "graft", cores: String = "*"): SparkSession.Builder =
+  /** The session of the measuring tools ([[graft.tools.Profile]],
+    * [[graft.tools.PlanDump]]), shaped like [[graft.Bench]]'s so their
+    * timings and plan shas compare with the board's: `local[cpus]` with
+    * cpus = `SPARK_GRAFT_CPUS` (default 4), shuffle partitions = cpus,
+    * AQE with coalescing, the engine confs.
+    */
+  def benchBuilder(): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     engineConfs(SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString))
-
-  def get(appName: String = "graft"): SparkSession = {
-    val s = builder(appName).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true"))
   }
+
+  /** Confs a child session copies from its parent: `newSession()` starts
+    * from the SparkConf, not from the parent's runtime values.
+    */
+  private val ChildConfs = Seq("spark.sql.session.timeZone", "spark.sql.shuffle.partitions",
+    "spark.sql.sources.v2.bucketing.enabled",
+    "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
+    "spark.sql.requireAllClusterKeysForCoPartition")
+
+  private val children =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), SparkSession]()
+
+  /** The child session of head `head` over `sfDir`, for a head whose plan
+    * needs a conf no other head may see. `newSession()` shares the
+    * SparkContext and the extensions but owns its SQLConf, so the
+    * `overrides` stay invisible to every other head, and they are still
+    * set when the caller lazily executes the returned DataFrame (a
+    * try/finally restore would be undone before Verify's write replans
+    * it). Created once per (head, sfDir): `overrides` is evaluated then
+    * and never again.
+    */
+  def child(spark: SparkSession, head: String, sfDir: String)(
+      overrides: => Seq[(String, String)]): SparkSession =
+    children.computeIfAbsent((head, sfDir), _ => {
+      val s = spark.newSession()
+      ChildConfs.foreach(k => spark.conf.getOption(k).foreach(s.conf.set(k, _)))
+      overrides.foreach { case (k, v) => s.conf.set(k, v) }
+      s
+    })
 }

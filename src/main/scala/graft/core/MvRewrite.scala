@@ -51,12 +51,8 @@ object MvRegistry {
     * MV that is fresh in one session's contract may be stale or
     * unknown in another's.
     */
-  private val bySession = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.ConcurrentHashMap[String, (MvDef, LogicalPlan)]]()
-  private val touched =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private val tick = new java.util.concurrent.atomic.AtomicLong()
-  private val MaxSessions = 128
+  private val bySession = new graft.io.Lru[String,
+    java.util.concurrent.ConcurrentHashMap[String, (MvDef, LogicalPlan)]](DimRegistry.MaxSessions)
 
   /** Only `register` creates a session's entry; the read paths
     * (`isEmpty`/`all`, called on every optimization) never do, so
@@ -64,31 +60,13 @@ object MvRegistry {
     * LRU-capped: eviction is semantically safe — a query over the fact
     * simply stops rewriting to the rollup (correct rows, slower plan).
     */
-  private def defsFor(spark: SparkSession) = {
-    val id = org.apache.spark.sql.graft.Bridge.sessionId(spark)
-    touched.put(id, tick.incrementAndGet())
-    val m = bySession.computeIfAbsent(id,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, (MvDef, LogicalPlan)]())
-    if (bySession.size > MaxSessions) evictLru()
-    m
-  }
+  private def defsFor(spark: SparkSession) =
+    bySession.getOrElseUpdate(org.apache.spark.sql.graft.Bridge.sessionId(spark))(
+      new java.util.concurrent.ConcurrentHashMap[String, (MvDef, LogicalPlan)]())
 
   private def existing(spark: SparkSession)
-      : Option[java.util.concurrent.ConcurrentHashMap[String, (MvDef, LogicalPlan)]] = {
-    val id = org.apache.spark.sql.graft.Bridge.sessionId(spark)
-    val m = bySession.get(id)
-    if (m != null) touched.put(id, tick.incrementAndGet())
-    Option(m)
-  }
-
-  private def evictLru(): Unit = this.synchronized {
-    import scala.jdk.CollectionConverters._
-    while (bySession.size > MaxSessions) {
-      val eldest = bySession.keySet.asScala
-        .minBy(id => Option(touched.get(id)).map(_.longValue).getOrElse(0L))
-      bySession.remove(eldest); touched.remove(eldest)
-    }
-  }
+      : Option[java.util.concurrent.ConcurrentHashMap[String, (MvDef, LogicalPlan)]] =
+    bySession.get(org.apache.spark.sql.graft.Bridge.sessionId(spark))
 
   /** Registering captures the MV's CURRENT snapshot (an
     * [[graft.io.Upsert]]-managed MV resolves its manifest's file list —

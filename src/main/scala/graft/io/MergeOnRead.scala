@@ -318,46 +318,24 @@ object MergeOnRead {
           lit("non-null values; the batch was not committed")))))
     }
 
-  /** Driver-side schema memo for delta batch dirs (r16, the
-    * Tables.schemaCache posture — guide §5 driver work): a bare
-    * `spark.read.parquet(dir)` infers the schema EAGERLY, which is a
-    * one-task Spark job per batch dir — a MOR read over four live
-    * batches scheduled four such jobs before its first real stage, the
-    * exact tiny-job fan-out behind the r15 32-core anti-scaling
-    * cluster (mor_sql_* heads). A delta batch dir is write-once
+  /** Name of the schema record inside a committed delta batch dir. */
+  private[graft] val DeltaSchemaFile = "_schema.json"
+
+  /** A delta batch read with its schema from [[FileMeta]]: a bare
+    * `spark.read.parquet(dir)` infers the schema eagerly, a one-task job
+    * per batch dir, and a MOR read over four live batches scheduled four
+    * such jobs before its first real stage. A batch dir is write-once
     * (committed under `batch=N`, never appended), so its schema is
-    * immutable metadata; the key still folds (bytes, max mtime, file
-    * count) so a re-created dir re-infers. Nothing row-valued is ever
-    * cached — every read still scans the parquet. mtime granularity:
-    * a same-size regeneration inside one mtime tick with an unchanged
-    * file count would serve the stale schema; batch dirs are
-    * committed-once by contract, so that window is unreachable in
-    * normal operation.
+    * immutable metadata, keyed on the identity of its data files.
     *
-    * A memo miss takes the schema the batch RECORDED at commit
+    * A miss takes the schema the batch RECORDED at commit
     * ([[DeltaSchemaFile]], written by [[merge]] inside the staged dir,
     * so it publishes with the rows) — one small driver read, no job.
     * This matters for a batch first seen through the change-feed scan:
     * its first readDeltaBatch comes a trigger later, from the next
     * fold's PRE lookup, on the fold's critical path. Inference remains
-    * only for batches that predate the record. The memo is an LRU of
-    * [[Lru.MemoEntries]] entries; [[dropTable]] drops the table's.
+    * only for batches that predate the record.
     */
-  private val deltaSchemaCache =
-    new Lru[(String, Long, Long, Int), org.apache.spark.sql.types.StructType](Lru.MemoEntries)
-
-  /** Name of the schema record inside a committed delta batch dir. */
-  private[graft] val DeltaSchemaFile = "_schema.json"
-
-  /** Forget every memoized delta-batch schema (specs exercise the
-    * inference fallback with it).
-    */
-  private[graft] def clearDeltaSchemaMemo(): Unit = deltaSchemaCache.clear()
-
-  /** Delta-batch schemas the memo holds for the table at `dir`. */
-  private[graft] def deltaSchemasMemoized(dir: String): Int =
-    deltaSchemaCache.count(k => Upsert.isUnder(dir)(k._1))
-
   private[graft] def readDeltaBatch(spark: SparkSession, p: String): DataFrame = {
     val path = new Path(p)
     val fs = FsOps.fs(spark, path)
@@ -366,9 +344,7 @@ object MergeOnRead {
       s.isFile && !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith("."))
     if (files.isEmpty) return spark.read.parquet(p) // degenerate: let Spark report
-    val key = (p, files.map(_.getLen).sum,
-      files.map(_.getModificationTime).max, files.length)
-    val schema = deltaSchemaCache.getOrElseUpdate(key)(
+    val schema = FileMeta(FileMeta.DeltaSchema, p, FileMeta.Id.of(files.toSeq))(
       listed.find(_.getPath.getName == DeltaSchemaFile)
         .flatMap(s => FsOps.readRawOpt(fs, s.getPath))
         .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
@@ -1885,8 +1861,7 @@ object MergeOnRead {
     if (!isMorRoot(spark, d)) return false
     Upsert.withWriterLease(spark, d) {
       val root = new Path(d)
-      Upsert.forgetTable(d)
-      deltaSchemaCache.removeKeys(k => Upsert.isUnder(d)(k._1))
+      FileMeta.forget(d)
       FsOps.fs(spark, root).delete(root, true)
     }
   }

@@ -15,59 +15,29 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Driver-side schema memo for the source star-schema files (r15,
-    * guide §5 "the driver should do almost no data work"): every
-    * `spark.read.parquet(path)` call re-infers the schema EAGERLY —
-    * directory listing plus a parquet footer read on the driver,
-    * ~20–50 ms — and a bench pass constructs each head twice, most
-    * heads touching 2–6 tables (measured 18.6 s of the 52 s board
-    * total spent in query CONSTRUCTION, OPTIMIZATION_r15.md; the
-    * `head.build_s` of `tools.Profile` measures it). The schema of
-    * an immutable source file is pure metadata, so it is cached keyed
-    * on (path, size, mtime): any regeneration of the testdata changes
-    * the key and re-infers; nothing row-valued is ever memoized (the
-    * no-result-caching bench rule stays intact — every query still
-    * scans the parquet). The fs stat that builds the key costs ~0.1 ms
-    * against the ~30 ms inference it saves.
+  /** A source file read with its schema from [[FileMeta]]: inference
+    * (a listing, a footer read and a one-task job) runs once per file,
+    * not once per head build. The key carries the one session conf that
+    * changes what inference returns for these files.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Long), org.apache.spark.sql.types.StructType]
-
   private def readCached(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val st = FsOps.fs(spark, p).getFileStatus(p)
-    // the one session conf that changes what schema parquet inference
-    // RETURNS for these files (TIMESTAMP(NANOS) → LongType) is part of
-    // the key (ADVICE r15): a session without the legacy conf must not
-    // be served the nanos-as-long shape the first session inferred.
-    // mtime granularity caveat: a same-size regeneration inside one
-    // mtime tick would serve the stale schema — the testdata generator
-    // rewrites whole files, so sizes shift; accepted and documented.
     val nanosConf = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    val key = (s"$path#nanosAsLong=$nanosConf", st.getLen, st.getModificationTime)
-    val schema = schemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(path).schema)
+    val schema = FileMeta(FileMeta.sourceSchema(nanosConf), path, fileId(spark, path))(
+      spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 
-  /** Row count of an immutable source file, memoized on the same
-    * (path, size, mtime) key as the schema (r15): a parquet count is a
-    * footer-metadata aggregate, but it still schedules a Spark job —
-    * build-once guards (e.g. the IVF ensureIndexed snapshot check)
-    * re-paid that job on every cache-hit invocation. Same caching
-    * posture as the schema memo: metadata of an immutable file, never
-    * query results.
+  /** Row count of an immutable source file, from [[FileMeta]]: a parquet
+    * count answers from footers but still schedules a job, which
+    * build-once guards (the IVF snapshot check) would pay on every hit.
     */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]
+  def rowCount(spark: SparkSession, path: String): Long =
+    FileMeta(FileMeta.SourceRows, path, fileId(spark, path))(
+      Long.box(readCached(spark, path).count())).longValue()
 
-  def rowCount(spark: SparkSession, path: String): Long = {
+  private def fileId(spark: SparkSession, path: String): FileMeta.Id = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val st = FsOps.fs(spark, p).getFileStatus(p)
-    val key = (path, st.getLen, st.getModificationTime)
-    countCache.computeIfAbsent(key,
-      _ => readCached(spark, path).count()).longValue()
+    FileMeta.Id.of(Seq(FsOps.fs(spark, p).getFileStatus(p)))
   }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
@@ -85,9 +55,10 @@ object Tables {
     * branch on the type Spark actually inferred rather than hard-coding one
     * generation's contract:
     *   - LongType: the file is parquet TIMESTAMP(NANOS), which the vectorized
-    *     reader only surfaces as raw nanos under the legacy conf (set below so
-    *     this branch is reachable instead of an analysis error). Convert with
-    *     integer `div` — a double division would lose precision above 2^53 ns.
+    *     reader only surfaces as raw nanos under the legacy conf (an engine
+    *     conf, so this branch is reachable instead of an analysis error).
+    *     Convert with integer `div` — a double division would lose precision
+    *     above 2^53 ns.
     *   - TIMESTAMP_NTZ: plain timestamp[us] with no UTC adjustment. Cast to
     *     the session-TZ TimestampType (sessions pin UTC, so the wall-clock
     *     value is preserved) — downstream windows/joins and the verify
@@ -95,7 +66,6 @@ object Tables {
     *   - TimestampType: use directly.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = readCached(s, s"$d/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

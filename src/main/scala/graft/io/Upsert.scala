@@ -181,76 +181,45 @@ object Upsert {
     Manifest(gen, props, inline ++ fromSegs, segRefs, rowCounts)
   }
 
-  /** Driver-side memo of PARSED manifests (r16, VERDICT r15 #3 — the
-    * Iceberg manifest-cache shape, guide §5 driver work). A committed
-    * `_manifest-<gen>` is write-once: it lands by rename and is never
-    * rewritten (the next commit is gen+1), so its parse is immutable
-    * metadata. The key still carries the root file's (len, mtime) so a
-    * dropped-and-recreated table whose gen numbering restarts is never
-    * served the dead table's file list. CURRENCY is not cached:
-    * [[currentManifest]] re-lists the dir on every call — a concurrent
-    * writer's freshly committed gen is picked up exactly as before,
-    * the memo only skips re-reading and re-parsing a (gen, len, mtime)
-    * we have parsed before (segment reads included, which is where the
-    * savings multiply for segmented manifests). Nothing row-valued is
-    * cached; every query still scans the parquet the manifest names.
-    * The memo is an LRU of [[Lru.MemoEntries]] entries: an evicted
-    * generation is re-read and re-parsed on its next use.
+  /** The parse of the committed manifest `st` (generation `gen`), from
+    * [[FileMeta]]: a `_manifest-<gen>` lands by rename and is never
+    * rewritten, so its parse (segment reads included) is immutable
+    * metadata; the file's identity keeps a recreated table whose gen
+    * numbering restarts from being served the dead table's file list.
+    * None when the file vanished (a racing vacuum or drop).
     */
-  private val manifestMemo =
-    new Lru[(String, Long, Long, Long), Manifest](Lru.MemoEntries)
-
   private def parseMemo(spark: SparkSession, dir: String,
                         st: org.apache.hadoop.fs.FileStatus,
-                        gen: Long): Option[Manifest] = {
-    val key = (dir, gen, st.getLen, st.getModificationTime)
-    manifestMemo.get(key).orElse {
-      val parsed = FsOps.readTextOpt(spark, st.getPath)
-        .map(parse(spark, dir, gen, _))
-      parsed.foreach(manifestMemo.put(key, _))
-      parsed
-    }
-  }
-
-  /** Parsed manifests the memo holds for tables at or under `dir`. */
-  private[graft] def manifestsMemoized(dir: String): Int =
-    manifestMemo.count(k => isUnder(dir)(k._1))
-
-  /** Whether path `p`, qualified or not, is `dir` or lies under it. */
-  private[io] def isUnder(dir: String)(p: String): Boolean = {
-    val root = new Path(dir).toUri.getPath.stripSuffix("/")
-    val q = new Path(p).toUri.getPath
-    q == root || q.startsWith(root + "/")
-  }
-
-  /** Drop every memoized manifest and layout of the table at `dir`. */
-  private[io] def forgetTable(dir: String): Unit = {
-    manifestMemo.removeKeys(k => isUnder(dir)(k._1))
-    layoutCache.removeKeys(k => isUnder(dir)(k._1))
-  }
+                        gen: Long): Option[Manifest] =
+    Some(FileMeta(FileMeta.ParsedManifest, st.getPath.toString, FileMeta.Id.of(Seq(st)))(
+      parse(spark, dir, gen, FsOps.readTextOpt(spark, st.getPath).getOrElse(return None))))
 
   /** The newest committed snapshot, or None for a missing/empty table.
     * One listing + one small-file read (plus one read per manifest
     * segment for huge tables) — the entire read-side planning cost of
     * snapshot isolation. Re-listing is the currency check; the parse
-    * itself is served from [[manifestMemo]] when this generation was
-    * seen before.
+    * itself is served from [[FileMeta]] when this generation was seen
+    * before.
     */
-  def currentManifest(spark: SparkSession, dir: String): Option[Manifest] = {
+  def currentManifest(spark: SparkSession, dir: String): Option[Manifest] =
+    manifestStatus(spark, dir, None).flatMap { case (g, st) => parseMemo(spark, dir, st, g) }
+
+  /** The generation and file status of manifest `gen`, or of the newest
+    * one when `gen` is None (a listing: the currency check).
+    */
+  private def manifestStatus(spark: SparkSession, dir: String, gen: Option[Long])
+      : Option[(Long, org.apache.hadoop.fs.FileStatus)] = {
     val root = new Path(dir)
     val fs = FsOps.fs(spark, root)
-    val listed =
-      try fs.listStatus(root)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val gens = listed.flatMap(s => s.getPath.getName match {
-      case ManifestRe(g) => Some((g.toLong, s))
-      case _ => None
-    })
-    if (gens.isEmpty) None
-    else {
-      val (g, st) = gens.maxBy(_._1)
-      parseMemo(spark, dir, st, g)
-    }
+    try gen match {
+      case Some(g) => Some((g, fs.getFileStatus(new Path(dir, manifestName(g)))))
+      case None =>
+        val gens = fs.listStatus(root).flatMap(s => s.getPath.getName match {
+          case ManifestRe(g) => Some((g.toLong, s))
+          case _ => None
+        })
+        if (gens.isEmpty) None else Some(gens.maxBy(_._1))
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Generations of every manifest still on disk, ascending — the
@@ -266,16 +235,11 @@ object Upsert {
 
   /** Read the snapshot committed as generation `gen` — time travel, as
     * long as [[vacuum]] has not collected its files yet. Served from
-    * [[manifestMemo]] after the first parse (one stat call checks the
-    * file is still the one we parsed).
+    * [[FileMeta]] after the first parse (one stat call checks the file
+    * is still the one we parsed).
     */
-  def manifestAt(spark: SparkSession, dir: String, gen: Long): Option[Manifest] = {
-    val p = new Path(dir, manifestName(gen))
-    val st =
-      try FsOps.fs(spark, p).getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    parseMemo(spark, dir, st, gen)
-  }
+  def manifestAt(spark: SparkSession, dir: String, gen: Long): Option[Manifest] =
+    manifestStatus(spark, dir, Some(gen)).flatMap { case (g, st) => parseMemo(spark, dir, st, g) }
 
   /** Resolve `TIMESTAMP AS OF`: the newest retained generation whose
     * [[CommittedAtProp]] stamp is ≤ `tsMs`. Resolution walks the
@@ -1037,20 +1001,22 @@ object Upsert {
                           needsIdRead: Boolean = false,
                           renamedFrom: Map[String, String] = Map.empty)
 
-  // a committed generation's file set is immutable, so (dir, gen) keys
-  // a sound cache — without it every DataFrame read loads the layout
-  // twice (TableProvider.inferSchema then getTable), and a SQL query
-  // through the catalog a third time
-  private val layoutCache = new Lru[(String, Long), BucketLayout](64)
-
+  // a committed generation's file set is immutable, so the layout is
+  // cached on its manifest's identity — without it every DataFrame read
+  // loads the layout twice (TableProvider.inferSchema then getTable), and
+  // a SQL query through the catalog a third time. The key names the
+  // manifest under `dir` as the caller spells it: the layout's file
+  // paths are built from that spelling.
   private[graft] def bucketLayout(spark: SparkSession, dir: String,
                                   gen: Option[Long] = None): BucketLayout = {
-    val m = gen.map(g => manifestAt(spark, dir, g).getOrElse(
-        throw new IllegalStateException(s"no manifest for gen=$g under $dir")))
-      .orElse(currentManifest(spark, dir)).getOrElse(
-        throw new NoTableException(s"no committed manifest under $dir"))
-    val key = (new Path(dir).toString, m.gen)
-    layoutCache.get(key).getOrElse {
+    def missing = gen match {
+      case Some(g) => new IllegalStateException(s"no manifest for gen=$g under $dir")
+      case None => new NoTableException(s"no committed manifest under $dir")
+    }
+    val (g, st) = manifestStatus(spark, dir, gen).getOrElse(throw missing)
+    FileMeta(FileMeta.Layout, new Path(dir, st.getPath.getName).toString,
+        FileMeta.Id.of(Seq(st))) {
+      val m = parseMemo(spark, dir, st, g).getOrElse(throw missing)
       // declared (session-free) schema: the layout is CACHED across
       // sessions and serves metadata surfaces too — the id-read gate
       // fires where a scan is built (UpsertBucketTable.newScanBuilder)
@@ -1075,7 +1041,7 @@ object Upsert {
         b -> rels.map(rel => (new Path(abs(dir, rel)).toString, lenByRel(rel)))
       }
       val (sortedBy, sortedGens) = sortedByOf(m)
-      val l = BucketLayout(m.gen, schema, m.numBuckets(DefaultNumBuckets),
+      BucketLayout(m.gen, schema, m.numBuckets(DefaultNumBuckets),
         m.props.get(PkColsProp).map(_.split(",").toSeq).getOrElse(Nil),
         m.props.get(VersionColProp),
         zoneColsOf(m), files,
@@ -1083,8 +1049,6 @@ object Upsert {
           new Path(abs(dir, rel)).toString -> n
         }, sortedBy, sortedGens,
         needsIdRead = needsIdRead(m), renamedFrom = renamedFromOf(m))
-      layoutCache.put(key, l)
-      l
     }
   }
 
@@ -2868,7 +2832,7 @@ object Upsert {
       if (currentManifest(spark, dir).isEmpty) false
       else {
         val root = new Path(dir)
-        forgetTable(dir)
+        FileMeta.forget(dir)
         FsOps.fs(spark, root).delete(root, true)
       }
     }

@@ -1589,9 +1589,6 @@ object Relational {
     * them). The ORACLE recomputes both over raw events; a green hash
     * proves the rename is pure metadata with no value drift.
     */
-  private val renameSessions =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def jSqlRename(spark: SparkSession, sfDir: String): DataFrame = {
     val root = sqlRenameEnsure(spark, sfDir)
     // SCOPED-CONF head (the CBO-head pattern): field-id matching is a
@@ -1599,18 +1596,9 @@ object Relational {
     // taxes every scan ~20%, so GraftSession leaves it off — the
     // renamed table is read through a CHILD session that opts in,
     // paying the cost exactly where the feature is used
-    val s2 = renameSessions.computeIfAbsent(sfDir, _ => {
-      val s = spark.newSession()
-      Seq("spark.sql.session.timeZone", "spark.sql.shuffle.partitions",
-        "spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "spark.sql.requireAllClusterKeysForCoPartition")
-        .foreach(k => spark.conf.getOption(k).foreach(s.conf.set(k, _)))
-      s.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sources.UpsertCatalog].getName)
-      s
-    })
+    val s2 = graft.core.GraftSession.child(spark, "j_sql_rename", sfDir)(Seq(
+      "spark.sql.parquet.fieldId.read.enabled" -> "true",
+      "spark.sql.catalog.graft" -> classOf[graft.sources.UpsertCatalog].getName))
     s2.sql(
       s"""SELECT event_id, event_type,
                  CAST(FLOOR(amount * 100) AS BIGINT) AS amount_cents

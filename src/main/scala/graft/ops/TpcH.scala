@@ -598,16 +598,6 @@ object TpcH {
     (l, o)
   }
 
-  /** Per-sfDir CHILD session for the CBO head: `newSession()` shares
-    * the SparkContext and the GraftExtensions but owns its SQLConf, so
-    * the head's cbo flip and broadcast threshold are invisible to
-    * every other head — and, critically, they are STILL SET when the
-    * caller lazily executes the returned DataFrame (a try/finally
-    * restore would be undone before Verify's write replans it).
-    */
-  private val cboSessions =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   /** CBO PAYOFF head (VERDICT r9 #5): a fact⋈dim join whose dim side
     * is range-FILTERED on a zone column. The broadcast threshold is
     * pinned below the dim's on-disk size (the 100 TB shape: a dim too
@@ -627,23 +617,13 @@ object TpcH {
   def qCboBroadcastFlip(spark: SparkSession, sfDir: String): DataFrame = {
     val (lRoot, oRoot) = cboEnsure(spark, sfDir)
     val dimBytes = graft.io.Upsert.stats(spark, oRoot).get.liveBytes
-    val s2 = cboSessions.computeIfAbsent(sfDir, _ => {
-      val s = spark.newSession()
-      // the engine confs the child must share (newSession starts from
-      // SparkConf defaults, not the parent's runtime values)
-      Seq("spark.sql.session.timeZone", "spark.sql.shuffle.partitions",
-        "spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "spark.sql.requireAllClusterKeysForCoPartition")
-        .foreach(k => spark.conf.getOption(k).foreach(s.conf.set(k, _)))
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold",
-        math.max(1L, dimBytes / 2).toString)
+    // a CHILD session (GraftSession.child): the cbo flip and the
+    // threshold, fixed at its creation, are invisible to every other head
+    val s2 = graft.core.GraftSession.child(spark, "q_cbo_broadcast_flip", sfDir)(Seq(
+      "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> math.max(1L, dimBytes / 2).toString,
       // the runtime rescue must not mask the PLANNED choice either way
-      s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        math.max(1L, dimBytes / 2).toString)
-      s
-    })
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> math.max(1L, dimBytes / 2).toString))
     cboJoin(s2, lRoot, oRoot)
   }
 
@@ -683,9 +663,6 @@ object TpcH {
     (l, o, c)
   }
 
-  private val reorderSessions =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   /** CBO JOIN-REORDER payoff (VERDICT r10 #3): a 3-table inner-join
     * chain written in the WORST syntactic order — fact ⋈ fact first
     * (lineitem ⋈ orders, the full 60k×15k intermediate), the filtered
@@ -704,19 +681,11 @@ object TpcH {
     */
   def qCboJoinReorder(spark: SparkSession, sfDir: String): DataFrame = {
     val (lRoot, oRoot, cRoot) = cboReorderEnsure(spark, sfDir)
-    val s2 = reorderSessions.computeIfAbsent(sfDir, _ => {
-      val s = spark.newSession()
-      Seq("spark.sql.session.timeZone", "spark.sql.shuffle.partitions",
-        "spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "spark.sql.requireAllClusterKeysForCoPartition")
-        .foreach(k => spark.conf.getOption(k).foreach(s.conf.set(k, _)))
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      s
-    })
+    val s2 = graft.core.GraftSession.child(spark, "q_cbo_join_reorder", sfDir)(Seq(
+      "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))
     cboReorderJoin(s2, lRoot, oRoot, cRoot)
   }
 

@@ -230,9 +230,8 @@ object IncrementalDws {
     if (pending.isEmpty) None
     else graft.io.MergeOnRead.contract(s, factDir).map { case (pk, _, _, _) =>
       pending.map { case (_, p) =>
-        // readDeltaBatch: batch dirs are write-once, so the schema memo
-        // (r16) saves the per-batch inference job other readers of the
-        // same batch already skip
+        // readDeltaBatch: batch dirs are write-once, so their schemas
+        // come from FileMeta, without the per-batch inference job
         graft.io.MergeOnRead.reconcileDeclared(s, factDir,
           graft.io.MergeOnRead.readDeltaBatch(s, p))
           .select(pk.map(col): _*)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import scala.collection.mutable
-import scala.util.chaining._
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -30,9 +29,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * failed, `error` instead of the figures; a failed head does not stop
   * the run.
   *
-  * The session and the timing are [[graft.Bench]]'s: `local[cpus]`,
-  * shuffle partitions = cpus, AQE with coalescing, the engine confs;
-  * a warm-up pass at the `sf0.001` sibling of the measured dir; each
+  * The session ([[graft.core.GraftSession.benchBuilder]]) and the
+  * timing are [[graft.Bench]]'s: `local[cpus]`, shuffle partitions =
+  * cpus, AQE with coalescing, the engine confs; a warm-up pass at the `sf0.001` sibling of the measured dir; each
   * head evaluated twice (`toRdd.count()`, cache cleared after each).
   * The line reports the faster run, and `fixture_s` = first − best,
   * the build-once cost a table-building head pays on its first run.
@@ -51,14 +50,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       sys.error("SPARK_GRAFT_SF_DIR must name the scale-factor dir to profile"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .pipe(graft.core.GraftSession.engineConfs)
-      .getOrCreate()
+    val spark = graft.core.GraftSession.benchBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val names = if (args.nonEmpty) args.toSeq
                 else graft.SparkEntry.queries.keys.toSeq.sorted

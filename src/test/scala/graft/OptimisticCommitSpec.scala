@@ -36,11 +36,12 @@ class OptimisticCommitSpec extends SparkSpec {
       .as[(String, Long, String)].collect().map(t => t._1 -> (t._2, t._3)).toMap
 
   test("manifest memo is never stale: concurrent commits and a table recreate are re-read") {
-    // r16: parsed manifests are memoized keyed on (dir, gen, len,
-    // mtime). Currency must stay un-cached — a reader that resolved
-    // gen N must see gen N+1 the moment a concurrent writer commits it
-    // — and a dropped-and-recreated table whose gen numbering restarts
-    // must never be served the dead table's file list.
+    // parsed manifests are cached (graft.io.FileMeta) on the manifest
+    // file's identity (len, mtime). Currency must stay un-cached — a
+    // reader that resolved gen N must see gen N+1 the moment a
+    // concurrent writer commits it — and a dropped-and-recreated table
+    // whose gen numbering restarts must never be served the dead
+    // table's file list.
     val dir = s"${Files.createTempDirectory("optmemo").toString}/t"
     Upsert.merge(spark, dir, Seq(("k1", 1L, "old")).toDF("id", "ver", "v"),
       pk, "ver")
@@ -55,7 +56,7 @@ class OptimisticCommitSpec extends SparkSpec {
     assert(g2.gen > g1.gen, "currency is re-listed, never memoized")
     assert(content(dir)("k1") == (2L, "new"))
     // drop + recreate: same dir, gen numbering restarts at g1.gen — the
-    // stale (dir, gen) parse must not resurface (len/mtime key them
+    // stale parse of that gen must not resurface (len/mtime key them
     // apart; a recreate cannot land inside the same mtime tick with
     // byte-identical length here because the file lists differ)
     val fs = FsOps.fs(spark, new Path(dir))

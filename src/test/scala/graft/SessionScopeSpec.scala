@@ -112,4 +112,22 @@ class SessionScopeSpec extends SparkSpec {
       }
     }
   }
+
+  test("each registry keeps MaxSessions sessions and drops the least recently touched") {
+    // DimRegistry.MaxSessions caps both registries
+    val d = mvDef
+    val registries = Seq[(String, SparkSession => Unit, SparkSession => Boolean)](
+      ("DimRegistry", DimRegistry.register(_, s"$sf/nation.parquet"), DimRegistry.isEmpty),
+      ("MvRegistry", MvRegistry.register(_, d), MvRegistry.isEmpty))
+    for ((name, register, isEmpty) <- registries) {
+      val sessions = (0 to DimRegistry.MaxSessions).map(_ => spark.newSession())
+      sessions.init.foreach(register)
+      // touching the first registered session leaves the second the eldest
+      assert(!isEmpty(sessions(0)), name)
+      register(sessions.last)
+      assert(!isEmpty(sessions(0)) && !isEmpty(sessions.last), name)
+      assert(isEmpty(sessions(1)), s"$name kept its least recently touched session")
+      assert(sessions.drop(2).forall(s => !isEmpty(s)), name)
+    }
+  }
 }

@@ -287,8 +287,8 @@ class MorChangeFeedSpec extends SparkSpec {
     val dir = new org.apache.hadoop.fs.Path(p)
     val fs = graft.io.FsOps.fs(spark, dir)
     graft.JobLog.around(spark) { log =>
-      // the recorded schema serves a cold memo without a job
-      MergeOnRead.clearDeltaSchemaMemo(); log.clear()
+      // the recorded schema serves a cold cache without a job
+      graft.io.FileMeta.clear(); log.clear()
       val recorded = MergeOnRead.readDeltaBatch(spark, p).schema
       assert(log.jobs().isEmpty, "a recorded schema must not run an inference job")
       // a batch without the record (written before it existed) still
@@ -296,18 +296,18 @@ class MorChangeFeedSpec extends SparkSpec {
       fs.listStatus(dir).map(_.getPath)
         .filter(_.getName.contains(MergeOnRead.DeltaSchemaFile))
         .foreach(fs.delete(_, false))
-      MergeOnRead.clearDeltaSchemaMemo(); log.clear()
+      graft.io.FileMeta.clear(); log.clear()
       val inferred = MergeOnRead.readDeltaBatch(spark, p).schema
       assert(log.jobs().nonEmpty, "no record: the schema is inferred")
       assert(inferred == recorded, s"inferred=$inferred\n recorded=$recorded")
     }
     // and the fold over the record-less batch stays exact
-    MergeOnRead.clearDeltaSchemaMemo()
+    graft.io.FileMeta.clear()
     IncrementalDws.streamingMor(spark, fact, dws, groupCols = Seq("gid"),
       sumCols = Seq("cents"), checkpointDir = ckpt,
       maxBatchesPerTrigger = Some(1)).awaitTermination(120000)
     MergeOnRead.merge(spark, fact, mkWave(3L, 0 until 100 by 4))
-    MergeOnRead.clearDeltaSchemaMemo()
+    graft.io.FileMeta.clear()
     IncrementalDws.streamingMor(spark, fact, dws, groupCols = Seq("gid"),
       sumCols = Seq("cents"), checkpointDir = ckpt,
       maxBatchesPerTrigger = Some(1)).awaitTermination(120000)
