@@ -39,7 +39,11 @@ object GraftSession {
     *     file). That is every offset, commit and state-store file of
     *     every trigger and every table commit. These calls now run
     *     through `java.nio` and start no process; files, `.crc`
-    *     sidecars, permission bits and rename semantics are as before.
+    *     sidecars, permission bits and rename semantics are as before;
+    *   - a generated-class cache of [[CodegenCacheEntries]] entries
+    *     (see there): Spark's default of 100 is smaller than the classes
+    *     one wave of the live pipeline runs, so every wave compiled most
+    *     of them again.
     */
   def engineConfs(b: SparkSession.Builder): SparkSession.Builder =
     b.withExtensions(new GraftExtensions) // graft_* SQL functions +
@@ -78,8 +82,30 @@ object GraftSession {
       // schema inferred before it
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
+
+  /** Capacity of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The cache is
+    * keyed on the class loader and the generated source, so the driver's
+    * and the executor's copy of one class are two entries, and a class
+    * that differs only in an inlined literal is a new one. The cap is
+    * static: it is read when the first class is compiled in the JVM, so
+    * a session that is not built through [[engineConfs]], or a JVM that
+    * generated code before such a session existed, keeps 100.
+    *
+    * Sized from compile counts at a cap far above any of them, so each
+    * count is the number of distinct classes (4-vCPU VM, seed 8104):
+    *   - one `rtdw_live` run: 255 classes;
+    *   - one `warehouse_queries` run: 173, none in its timed window;
+    *   - the whole `Bench` board through [[graft.tools.Profile]] at
+    *     sf0.01, `SPARK_GRAFT_CPUS=4`, warm-up at sf0.001 included: 2,452.
+    * 4,096 holds the board; 2,048 would not. At Spark's 100, one
+    * `rtdw_live` run (seed 8801) compiled 893 classes (14.6 s of janino
+    * time, 147–194 per timed wave).
+    */
+  val CodegenCacheEntries = 4096
 
   /** The session of the measuring tools ([[graft.tools.Profile]],
     * [[graft.tools.PlanDump]]), shaped like [[graft.Bench]]'s so their

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -235,7 +235,7 @@ object MergeOnRead {
           batch.write.mode("overwrite").parquet(tmp.toString)
           // the schema this batch was written with rides the SAME rename
           // as its rows: readers take it from here instead of running a
-          // footer-inference job (see readDeltaBatch)
+          // footer-inference job (see readDeltaBatches)
           val out = fs.create(new Path(tmp, DeltaSchemaFile), true)
           try out.write(batch.schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           finally out.close()
@@ -321,37 +321,79 @@ object MergeOnRead {
   /** Name of the schema record inside a committed delta batch dir. */
   private[graft] val DeltaSchemaFile = "_schema.json"
 
-  /** A delta batch read with its schema from [[FileMeta]]: a bare
-    * `spark.read.parquet(dir)` infers the schema eagerly, a one-task job
-    * per batch dir, and a MOR read over four live batches scheduled four
-    * such jobs before its first real stage. A batch dir is write-once
-    * (committed under `batch=N`, never appended), so its schema is
-    * immutable metadata, keyed on the identity of its data files.
+  /** Delta batches `batches` ((id, dir), ascending) read as ONE
+    * relation, each row tagged with its batch id in [[BatchCol]] (a
+    * partition value of the feed's reader, [[graft.sources
+    * .MorChangeFeedSource.readBatches]]). Batches are blind appends and
+    * may carry evolved schemas: the relation has their union shape, and
+    * a column first seen in a later batch reads NULL in the earlier
+    * ones. A column whose type differs between batches cannot come from
+    * one parquet read: batches that agree on every shared type read as
+    * one relation each, and those relations union by name, coercing the
+    * way a union of per-batch reads did.
     *
-    * A miss takes the schema the batch RECORDED at commit
-    * ([[DeltaSchemaFile]], written by [[merge]] inside the staged dir,
-    * so it publishes with the rows) — one small driver read, no job.
-    * This matters for a batch first seen through the change-feed scan:
-    * its first readDeltaBatch comes a trigger later, from the next
-    * fold's PRE lookup, on the fold's critical path. Inference remains
-    * only for batches that predate the record.
+    * Each batch's schema comes from [[FileMeta]]: a bare
+    * `spark.read.parquet(dir)` infers the schema eagerly, a one-task job
+    * per batch dir. A batch dir is write-once (committed under `batch=N`,
+    * never appended), so its schema is immutable metadata, keyed on the
+    * identity of its data files. A miss takes the schema the batch
+    * RECORDED at commit ([[DeltaSchemaFile]], written by [[merge]] inside
+    * the staged dir, so it publishes with the rows) — one small driver
+    * read, no job. This matters for a batch first seen through the
+    * change-feed scan: its first read comes a trigger later, from the
+    * next fold's PRE lookup, on the fold's critical path. Inference
+    * remains only for batches that predate the record.
+    *
+    * The dirs are listed here, once each: a file index over many batch
+    * dirs would list them again, as a parallel listing job past 32 paths.
     */
-  private[graft] def readDeltaBatch(spark: SparkSession, p: String): DataFrame = {
-    val path = new Path(p)
-    val fs = FsOps.fs(spark, path)
-    val listed = fs.listStatus(path)
-    val files = listed.filter(s =>
-      s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-    if (files.isEmpty) return spark.read.parquet(p) // degenerate: let Spark report
-    val schema = FileMeta(FileMeta.DeltaSchema, p, FileMeta.Id.of(files.toSeq))(
+  private[graft] def readDeltaBatches(spark: SparkSession,
+                                      batches: Seq[(Long, String)]): DataFrame = {
+    import org.apache.spark.sql.types.StructType
+    require(batches.nonEmpty, "readDeltaBatches needs at least one batch")
+    val fs = FsOps.fs(spark, new Path(batches.head._2))
+    val listed = batches.flatMap { case (id, p) =>
+      val all = fs.listStatus(new Path(p)).toSeq
+      val files = graft.sources.MorChangeFeedSource.dataFiles(all)
+      if (files.isEmpty) None else Some((id, files, deltaSchema(spark, fs, p, all, files)))
+    }
+    // degenerate (no batch holds a data file): let Spark report
+    if (listed.isEmpty) return spark.read.parquet(batches.head._2)
+    def canon(n: String) = SchemaEvolution.canon(spark, n)
+    def widened(acc: StructType, next: StructType): StructType = {
+      val have = acc.fieldNames.map(canon).toSet
+      StructType(acc.fields ++ next.fields.filterNot(f => have(canon(f.name))))
+    }
+    def agree(acc: StructType, next: StructType): Boolean = {
+      val types = acc.fields.map(f => canon(f.name) -> f.dataType.catalogString).toMap
+      next.fields.forall(f => types.get(canon(f.name)).forall(_ == f.dataType.catalogString))
+    }
+    val groups = listed.foldLeft(Vector.empty[(StructType, Vector[(Long, Seq[FileStatus])])]) {
+      case (gs, (id, files, schema)) => gs.indexWhere(g => agree(g._1, schema)) match {
+        case -1 => gs :+ ((schema, Vector(id -> files)))
+        case i => gs.updated(i, (widened(gs(i)._1, schema), gs(i)._2 :+ (id -> files)))
+      }
+    }
+    val table = new Path(batches.head._2).getParent.getParent.getName
+    val reads = groups.map { case (schema, bs) =>
+      graft.sources.MorChangeFeedSource.readBatches(spark, table,
+        org.apache.spark.sql.graft.ManifestScan.asNullable(schema), bs)
+    }
+    if (reads.size == 1) reads.head
+    else reads.reduce(_.unionByName(_, allowMissingColumns = true))
+      .select((listed.map(_._3).reduce(widened).fieldNames :+ BatchCol).toIndexedSeq.map(col): _*)
+  }
+
+  /** The schema of one committed delta batch dir (see [[readDeltaBatches]]). */
+  private def deltaSchema(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                          p: String, listed: Seq[FileStatus], files: Seq[FileStatus])
+      : org.apache.spark.sql.types.StructType =
+    FileMeta(FileMeta.DeltaSchema, p, FileMeta.Id.of(files))(
       listed.find(_.getPath.getName == DeltaSchemaFile)
         .flatMap(s => FsOps.readRawOpt(fs, s.getPath))
         .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
           .asInstanceOf[org.apache.spark.sql.types.StructType])
         .getOrElse(spark.read.parquet(p).schema))
-    spark.read.schema(schema).parquet(p)
-  }
 
   /** On-disk bytes of the given delta dirs — a driver-side listing,
     * no Spark job. Drives the fast-path/fallback choice in [[read]].
@@ -609,13 +651,7 @@ object MergeOnRead {
     // NULL columns into a base manifest v's snapshot still uses).
     val kv = kvAsOf.orElse(contractKv(spark, dir))
     val baseOpt = manOpt.map(scanBase(spark, dir, _))
-    val deltaOpt0 =
-      if (live.isEmpty) None
-      else Some(live.map { case (id, p) =>
-        readDeltaBatch(spark, p).withColumn(BatchCol, lit(id))
-        // deltas are blind appends, so batches may carry evolved
-        // schemas — missing columns fill with NULL
-      }.reduce(_.unionByName(_, allowMissingColumns = true)))
+    val deltaOpt0 = if (live.isEmpty) None else Some(readDeltaBatches(spark, live))
     // delta side restricted to the same buckets (hash under the
     // SNAPSHOT manifest's count — the exact placement the base files
     // use): rows outside the restriction are invisible to this read's
@@ -1547,11 +1583,8 @@ object MergeOnRead {
     if (man.numBuckets(numBuckets) != numBuckets) return false
     val baseBuckets = man.files.keySet.filter(_ >= 0)
     if (baseBuckets.isEmpty) return false
-    val deltaRaw = live.map { case (id, p) =>
-      readDeltaBatch(spark, p).withColumn(BatchCol, lit(id))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
     val (bOpt, dOpt) = widenForEvolution(Some(scanBase(spark, dir, man)),
-      Some(deltaRaw))
+      Some(readDeltaBatches(spark, live)))
     val (b, d) = (bOpt.get, dOpt.get)
     // distinct placement buckets of the delta keys: one small job,
     // result bounded by numBuckets
@@ -1775,10 +1808,10 @@ object MergeOnRead {
     }
     val deltaOpt =
       if (live.isEmpty) None
-      else Some(live.map { case (id, p) =>
-        val d = readDeltaBatch(spark, p)
-        d.filter(residual(d)).withColumn(BatchCol, lit(id))
-      }.reduce(_.unionByName(_, allowMissingColumns = true)))
+      else {
+        val d = readDeltaBatches(spark, live)
+        Some(d.filter(residual(d)))
+      }
     widenForEvolution(baseOpt.map(_.drop(BatchCol)), deltaOpt) match {
       case (Some(b), Some(d)) => Some(d.unionByName(b.withColumn(BatchCol, lit(-1L))))
       case (Some(b), None) => Some(b.withColumn(BatchCol, lit(-1L)))

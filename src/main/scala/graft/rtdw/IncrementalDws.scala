@@ -229,13 +229,9 @@ object IncrementalDws {
       .filter(_._1 > kmax).sortBy(_._1).take(cap)
     if (pending.isEmpty) None
     else graft.io.MergeOnRead.contract(s, factDir).map { case (pk, _, _, _) =>
-      pending.map { case (_, p) =>
-        // readDeltaBatch: batch dirs are write-once, so their schemas
-        // come from FileMeta, without the per-batch inference job
-        graft.io.MergeOnRead.reconcileDeclared(s, factDir,
-          graft.io.MergeOnRead.readDeltaBatch(s, p))
-          .select(pk.map(col): _*)
-      }.reduce(_.unionByName(_)).distinct()
+      graft.io.MergeOnRead.reconcileDeclared(s, factDir,
+        graft.io.MergeOnRead.readDeltaBatches(s, pending))
+        .select(pk.map(col): _*).distinct()
     }
   }
 

@@ -187,13 +187,13 @@ object MorChangeFeed {
           if (ks.isEmpty) None
           else MergeOnRead.pinnedCandidates(spark, morRoot, snapPre, pk, ks, n)
         rankImages(cands.map(MergeOnRead.reconcileDeclared(spark, morRoot, _)),
-          admitted, pk, vc, kmin)
+          admitted, pk, vc)
       // deleteFlagCol = None: resolution is identical (version LWW), but
       // tombstone WINNERS stay — a deleted key's tombstone must beat an
       // admitted row of lower version in the derived POST
       case Right(pre) =>
         rankImages(Some(pre.withColumn(MergeOnRead.BatchCol, lit(-1L))),
-          admitted, pk, vc, kmin)
+          admitted, pk, vc)
     }
     emitChanges(ranked, del)
   }
@@ -206,22 +206,27 @@ object MorChangeFeed {
   /** ONE window pass over PRE ∪ admitted rows ranks both images. PRE
     * rows carry a source tag below kmin in [[MergeOnRead.BatchCol]]
     * (base −1, a pre-range delta its batch id), admitted rows their own
-    * batch id ≥ kmin; both ranks use [[MergeOnRead.lwwOrder]]. The POST
-    * winner is the first row of the key ([[RnCol]] = 1); the PRE winner
-    * the first row with a tag below kmin ([[PreRnCol]] = 1 among the
-    * PRE rows). The (pk, isPre) partitioning is satisfied by the pk
-    * exchange, so both ranks share one shuffle. Version ties fall to
-    * the admitted row: its tag exceeds every PRE tag — the same
-    * base-is-batch−1 ordering the resolution itself uses. A PRE side of
-    * several rows per key (unresolved point-lookup candidates) is
-    * resolved by its own rank; one already resolved ranks 1 trivially.
+    * batch id ≥ kmin; both ranks use [[MergeOnRead.lwwOrder]]. Each side
+    * is marked in [[PreCol]] where it enters the union (PRE true,
+    * admitted false), the same split a `BatchCol < kmin` test makes,
+    * without a literal that changes every trigger and with it the
+    * generated code of the fold's window stage. The POST winner is the
+    * first row of the key ([[RnCol]] = 1); the PRE winner the first PRE
+    * row ([[PreRnCol]] = 1 among the PRE rows). The (pk, isPre)
+    * partitioning is satisfied by the pk exchange, so both ranks share
+    * one shuffle. Version ties fall to the admitted row: its tag exceeds
+    * every PRE tag — the same base-is-batch−1 ordering the resolution
+    * itself uses. A PRE side of several rows per key (unresolved
+    * point-lookup candidates) is resolved by its own rank; one already
+    * resolved ranks 1 trivially.
     */
   private def rankImages(pre: Option[DataFrame], admitted: DataFrame,
-                         pk: Seq[String], vc: String, kmin: Long): DataFrame = {
+                         pk: Seq[String], vc: String): DataFrame = {
     require(!admitted.columns.exists(Seq(PreCol, RnCol, PreRnCol).contains),
       s"feed rows must not carry the reserved columns $PreCol/$RnCol/$PreRnCol")
-    val all = pre.fold(admitted)(_.unionByName(admitted, allowMissingColumns = true))
-      .withColumn(PreCol, col(MergeOnRead.BatchCol) < kmin)
+    val adm = admitted.withColumn(PreCol, lit(false))
+    val all = pre.fold(adm)(p =>
+      p.withColumn(PreCol, lit(true)).unionByName(adm, allowMissingColumns = true))
     val order = MergeOnRead.lwwOrder(vc)
     all.withColumn(RnCol, row_number().over(
         Window.partitionBy(pk.map(col): _*).orderBy(order: _*)))
@@ -407,7 +412,7 @@ object MorChangeFeed {
 
     val ranked = rankImages(Some(preWave.withColumn(MergeOnRead.BatchCol, lit(-1L))),
       raw.withColumnRenamed(MorChangeFeedSource.BatchCol, MergeOnRead.BatchCol),
-      pk, vc, kmin)
+      pk, vc)
     val changes = emitChanges(ranked, del)
 
     // carry AS OF kmax: wave keys take their window winner (tombstones
@@ -472,9 +477,7 @@ object MorChangeFeed {
         broadcastBudget(spark))
       return post.withColumn(ChangeFeed.ChangeCol, lit("add"))
     }
-    val raw = ids.map(k => MergeOnRead.readDeltaBatch(spark, all(k))
-        .withColumn(MorChangeFeedSource.BatchCol, lit(k)))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val raw = MergeOnRead.readDeltaBatches(spark, ids.map(k => k -> all(k)))
     // the range is explicit — the bounds are known without a min/max job
     retractStreamBounded(spark, morRoot, raw, maxPointKeys,
       Some((fromExclusive + 1, to)))

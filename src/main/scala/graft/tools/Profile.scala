@@ -24,10 +24,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    `exec.spill_bytes`: summed task metrics.
   *
   * Besides these it reports `wall_s`, `plan_sha` ([[PlanCanon.sha]] of
-  * the final plan, as [[graft.Bench]] hashes it), `jobs` (one
-  * `[stages, tasks]` pair per job, in job order) and, for a head that
-  * failed, `error` instead of the figures; a failed head does not stop
-  * the run.
+  * the final plan, as [[graft.Bench]] hashes it), `codegen.compiles`
+  * (generated classes compiled during the call, driver and executors:
+  * misses of Spark's codegen class cache), `jobs` (one `[stages, tasks]`
+  * pair per job, in job order) and, for a head that failed, `error`
+  * instead of the figures; a failed head does not stop the run.
   *
   * The session ([[graft.core.GraftSession.benchBuilder]]) and the
   * timing are [[graft.Bench]]'s: `local[cpus]`, shuffle partitions =
@@ -93,11 +94,12 @@ object Profile {
 
   /** One evaluation of one head. */
   final case class Run(wallS: Double, sha: String, layers: Seq[(String, Double)],
-                       jobs: Seq[(Int, Long)]) {
+                       compiles: Long, jobs: Seq[(Int, Long)]) {
     def json(head: String, fixtureS: Double): String = {
       val fields = Seq("head" -> str(head), "wall_s" -> num(wallS),
         "fixture_s" -> num(fixtureS), "plan_sha" -> str(sha)) ++
         layers.map { case (k, v) => k -> num(v) } :+
+        ("codegen.compiles" -> compiles.toString) :+
         ("jobs" -> jobs.map { case (s, t) => s"[$s,$t]" }.mkString("[", ",", "]"))
       fields.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
     }
@@ -114,6 +116,10 @@ object Profile {
       case c if c < ' ' => "\\u%04x".format(c.toInt)
       case c => c.toString
     } + "\""
+
+  /** Generated classes compiled in this JVM so far. */
+  def compiled(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Epoch milliseconds with sub-millisecond resolution, comparable with
     * the epoch-ms times of listener events and `QueryExecution.tracker`.
@@ -221,11 +227,13 @@ object Profile {
         Seq(jobStart, jobs, stageJob, running).foreach(_.clear())
         stages.clear(); phases.clear(); markers.clear()
       }
+      val c0 = compiled()
       val t0 = Clock.nowMs
       val qe = build.queryExecution
       val t1 = Clock.nowMs
       qe.toRdd.count()
       val t2 = Clock.nowMs
+      val compiles = compiled() - c0
       val sha = PlanCanon.sha(qe.executedPlan.toString)
       flush()
       addPhases(qe)
@@ -264,7 +272,7 @@ object Profile {
           val own = stages.filter(_._1 == j)
           (own.size, own.map(_._2(0)).sum)
         }
-        Run((t2 - t0) / 1000, sha, layers, perJob)
+        Run((t2 - t0) / 1000, sha, layers, compiles, perJob)
       }
     }
   }

@@ -54,10 +54,30 @@ class ProfileSpec extends SparkSpec {
       spark.catalog.clearCache()
 
       val names = rec.fieldNames().asScala.toSet --
-        Set("head", "wall_s", "fixture_s", "plan_sha", "jobs")
+        Set("head", "wall_s", "fixture_s", "plan_sha", "codegen.compiles", "jobs")
       assert(names.size == 16 && names.subsetOf(perLayer),
         s"not per_layer names of BENCHMARK.json: ${names -- perLayer}")
     }
+  }
+
+  test("codegen.compiles is the compile count of the timed call; a head profiled again compiles none") {
+    // each call inlines a new long literal: both evaluations compile the
+    // same number of new classes, so a count around the whole profile
+    // call is twice the reported one
+    val calls = new java.util.concurrent.atomic.AtomicLong(7777777L)
+    val fresh: Profile.Head = (s, _) =>
+      s.range(8).selectExpr(s"id * ${calls.incrementAndGet()}L as v")
+    val lines = ArrayBuffer.empty[String]
+    val c0 = Profile.compiled()
+    Profile.profile(spark, Seq("fresh" -> fresh), sf)(lines += _)
+    val around = Profile.compiled() - c0
+    val reported = mapper.readTree(lines.head).get("codegen.compiles").asLong
+    assert(reported > 0 && 2 * reported == around, s"${lines.head} vs $around around the call")
+
+    val q1 = Seq("q1_pricing" -> SparkEntry.queries("q1_pricing"))
+    Profile.profile(spark, q1, sf)(lines += _)
+    Profile.profile(spark, q1, sf)(lines += _)
+    assert(mapper.readTree(lines.last).get("codegen.compiles").asLong == 0, lines.last)
   }
 
   test("a head that throws yields an error line and the next head is still profiled") {

@@ -231,7 +231,7 @@ class MorChangeFeedSpec extends SparkSpec {
     graft.JobLog.around(spark) { log =>
       drainCounting(log, fact, dws, ckpt) // bootstrap (kmin = 0)
       // wave 2 reaches this consumer through the feed scan only, so the
-      // wave-3 fold's PRE lookup is the first readDeltaBatch of it
+      // wave-3 fold's PRE lookup is the first readDeltaBatches of it
       MergeOnRead.merge(spark, fact, mkWave(2L, 0 until 200 by 5))
       drainCounting(log, fact, dws, ckpt)
       // caught up, one wave per trigger (a visible backlog would take
@@ -283,13 +283,13 @@ class MorChangeFeedSpec extends SparkSpec {
     MergeOnRead.recordContract(spark, fact, pk, "__v", Some("op"),
       Upsert.DefaultNumBuckets)
     MergeOnRead.merge(spark, fact, mkWave(2L, 0 until 100 by 3))
-    val (_, p) = MergeOnRead.deltaBatches(spark, fact).last
+    val (id, p) = MergeOnRead.deltaBatches(spark, fact).last
     val dir = new org.apache.hadoop.fs.Path(p)
     val fs = graft.io.FsOps.fs(spark, dir)
     graft.JobLog.around(spark) { log =>
       // the recorded schema serves a cold cache without a job
       graft.io.FileMeta.clear(); log.clear()
-      val recorded = MergeOnRead.readDeltaBatch(spark, p).schema
+      val recorded = MergeOnRead.readDeltaBatches(spark, Seq(id -> p)).schema
       assert(log.jobs().isEmpty, "a recorded schema must not run an inference job")
       // a batch without the record (written before it existed) still
       // reads: the schema is inferred, by a job, and agrees
@@ -297,7 +297,7 @@ class MorChangeFeedSpec extends SparkSpec {
         .filter(_.getName.contains(MergeOnRead.DeltaSchemaFile))
         .foreach(fs.delete(_, false))
       graft.io.FileMeta.clear(); log.clear()
-      val inferred = MergeOnRead.readDeltaBatch(spark, p).schema
+      val inferred = MergeOnRead.readDeltaBatches(spark, Seq(id -> p)).schema
       assert(log.jobs().nonEmpty, "no record: the schema is inferred")
       assert(inferred == recorded, s"inferred=$inferred\n recorded=$recorded")
     }
