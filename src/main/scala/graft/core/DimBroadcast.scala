@@ -57,10 +57,9 @@ object DimRegistry {
   def unregister(spark: SparkSession, tablePath: String): Unit =
     existing(spark).foreach(_.remove(norm(tablePath)))
 
-  /** True when `p` is a registered table path or lies inside one —
-    * manifest-managed tables (io.Upsert) scan explicit FILE lists, so
-    * a leaf's root path is `<table>/<bucket-file>.parquet`, not the
-    * table dir itself.
+  /** True when `p` is a registered table path or lies inside one — a
+    * merge-on-read table's scans are rooted at its `base` and `delta`
+    * dirs, not at the table dir itself.
     */
   def covers(spark: SparkSession, p: String): Boolean =
     existing(spark).exists { set =>

@@ -1,7 +1,7 @@
 package graft.io
 
 import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Small filesystem commit primitives shared by the io layer.
@@ -64,6 +64,19 @@ object FsOps {
         true
       } catch { case _: java.io.IOException => false }
     }
+
+  /** Statuses of `files`, in their order: ONE `listStatus` per distinct
+    * parent dir instead of one `getFileStatus` per file — O(dirs), not
+    * O(files), round trips on object storage. A name its dir's listing
+    * lacks is statused on its own (a missing file fails there).
+    */
+  def statuses(fs: FileSystem, files: Seq[Path]): Seq[FileStatus] = {
+    val listed = files.map(_.getParent).distinct.map { d =>
+      d -> fs.listStatus(d).iterator.filter(_.isFile)
+        .map(st => st.getPath.getName -> st).toMap
+    }.toMap
+    files.map(p => listed(p.getParent).getOrElse(p.getName, fs.getFileStatus(p)))
+  }
 
   /** Read a small file bypassing checksum sidecars (None on any read
     * failure — a concurrently rewritten lease token is simply "not

@@ -323,8 +323,13 @@ object MergeOnRead {
 
   /** Delta batches `batches` ((id, dir), ascending) read as ONE
     * relation, each row tagged with its batch id in [[BatchCol]] (a
-    * partition value of the feed's reader, [[graft.sources
-    * .MorChangeFeedSource.readBatches]]). Batches are blind appends and
+    * partition value of the [[org.apache.spark.sql.graft.ManifestScan]]
+    * over the delta root, so a [[BatchCol]] predicate prunes whole
+    * batches before any file is read). One relation is one scan and one
+    * codegen stage however many batches it holds, so a plan over a
+    * growing delta log keeps its generated code from one trigger to the
+    * next; a union of per-batch scans renumbered every stage after
+    * them. Batches are blind appends and
     * may carry evolved schemas: the relation has their union shape, and
     * a column first seen in a later batch reads NULL in the earlier
     * ones. A column whose type differs between batches cannot come from
@@ -374,10 +379,15 @@ object MergeOnRead {
         case i => gs.updated(i, (widened(gs(i)._1, schema), gs(i)._2 :+ (id -> files)))
       }
     }
-    val table = new Path(batches.head._2).getParent.getParent.getName
+    import org.apache.spark.sql.graft.ManifestScan
+    val root = fs.makeQualified(new Path(batches.head._2).getParent)
+    val batchSchema = StructType(Seq(
+      org.apache.spark.sql.types.StructField(BatchCol,
+        org.apache.spark.sql.types.LongType, nullable = false)))
     val reads = groups.map { case (schema, bs) =>
-      graft.sources.MorChangeFeedSource.readBatches(spark, table,
-        org.apache.spark.sql.graft.ManifestScan.asNullable(schema), bs)
+      ManifestScan.parquetFiles(spark, root, schema, batchSchema,
+        bs.map { case (id, files) => ManifestScan.Group(
+          org.apache.spark.sql.catalyst.InternalRow(id), files) })
     }
     if (reads.size == 1) reads.head
     else reads.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -526,25 +536,6 @@ object MergeOnRead {
       deltaBatches(spark, d).nonEmpty
   }
 
-  /** Base scan under the manifest's RECORDED schema: since the
-    * incremental sorted compaction (r13) a base may mix generations
-    * whose files predate a widening — footer inference would pick one
-    * random shape and silently drop the newer columns; the explicit
-    * schema makes pre-widening files surface typed NULLs instead
-    * (the same contract [[Upsert.scanFiles]] applies). Pre-schema
-    * legacy manifests (always single-generation) keep inference.
-    */
-  private def scanBase(spark: SparkSession, dir: String,
-                       man: Upsert.Manifest): DataFrame = {
-    // readSchemaOf, not tableSchema: the gate strips field ids unless
-    // EVERY referenced base file is id-stamped — an incremental
-    // compaction may carry pre-r13 files, and an id-carrying request
-    // refuses id-less parquet outright
-    val r = Upsert.readSchemaOf(spark, man)
-      .fold(spark.read)(s => spark.read.schema(s))
-    r.parquet(man.allFiles.map(r => s"${basePath(dir)}/$r"): _*)
-  }
-
   private def dropDeletes(df: DataFrame, deleteFlagCol: Option[String]): DataFrame =
     deleteFlagCol match {
       case Some(f) => df.filter(col(f) =!= "delete" || col(f).isNull)
@@ -650,7 +641,7 @@ object MergeOnRead {
     // columns (strict: a bounded compaction may have baked later-added
     // NULL columns into a base manifest v's snapshot still uses).
     val kv = kvAsOf.orElse(contractKv(spark, dir))
-    val baseOpt = manOpt.map(scanBase(spark, dir, _))
+    val baseOpt = manOpt.map(Upsert.readManifest(spark, basePath(dir), _))
     val deltaOpt0 = if (live.isEmpty) None else Some(readDeltaBatches(spark, live))
     // delta side restricted to the same buckets (hash under the
     // SNAPSHOT manifest's count — the exact placement the base files
@@ -670,7 +661,7 @@ object MergeOnRead {
         // valid empty result, typed from the UNPRUNED base so legacy
         // pre-schemaDDL contracts don't fall into the mistyped-dir
         // refusal below
-        scanBase(spark, dir, snap.man.get).limit(0)
+        Upsert.readManifest(spark, basePath(dir), snap.man.get).limit(0)
       case (None, None) =>
         // a CONTRACT-SCHEMA'd root with no content yet (a streaming
         // sink created it; the first epoch has not landed) is an empty
@@ -1583,7 +1574,7 @@ object MergeOnRead {
     if (man.numBuckets(numBuckets) != numBuckets) return false
     val baseBuckets = man.files.keySet.filter(_ >= 0)
     if (baseBuckets.isEmpty) return false
-    val (bOpt, dOpt) = widenForEvolution(Some(scanBase(spark, dir, man)),
+    val (bOpt, dOpt) = widenForEvolution(Some(Upsert.readManifest(spark, basePath(dir), man)),
       Some(readDeltaBatches(spark, live)))
     val (b, d) = (bOpt.get, dOpt.get)
     // distinct placement buckets of the delta keys: one small job,

@@ -809,8 +809,7 @@ object Upsert {
     * silently serving NULL. Use on every path that builds a FileScan;
     * metadata paths use [[declaredSchemaOf]] directly.
     */
-  private[graft] def readSchemaOf(spark: SparkSession, m: Manifest,
-                                  dir: String = "<table>")
+  private[graft] def readSchemaOf(spark: SparkSession, m: Manifest, dir: String)
       : Option[org.apache.spark.sql.types.StructType] = {
     if (needsIdRead(m) && !FieldIds.idReadEnabled(spark))
       refuseWithoutIdRead(dir, renamedFromOf(m))
@@ -944,8 +943,22 @@ object Upsert {
     m.props.get(ValueClusterProp)
       .map(_.split(",").filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
 
-  private def scanFiles(spark: SparkSession, dir: String, rels: Seq[String],
-                        schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+  /** The files `rels` of table dir `dir` as one relation ([[scanPaths]]). */
+  private[graft] def scanFiles(spark: SparkSession, dir: String, rels: Seq[String],
+                               schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : DataFrame =
+    scanPaths(spark, dir, rels.map(r => new Path(abs(dir, r))), schema)
+
+  /** Parquet `files` as one relation through
+    * [[org.apache.spark.sql.graft.ManifestScan]], rooted at the qualified
+    * `root` dir: statused with one listing per parent dir, no discovery
+    * job. Without a `schema` (a pre-schema legacy manifest, or staged
+    * files) the first file's footer names it, as Spark's own inference
+    * does with mergeSchema off.
+    */
+  private[graft] def scanPaths(spark: SparkSession, root: String, files: Seq[Path],
+                               schema: Option[org.apache.spark.sql.types.StructType])
+      : DataFrame = {
     // an id-carrying schema here means readSchemaOf decided ids are
     // load-bearing (renamed table, every file stamped); the MATCHING
     // side is the session conf — Spark propagates it into the reader,
@@ -953,16 +966,29 @@ object Upsert {
     // (measured ~20% tax on every scan), so readSchemaOf refuses
     // renamed tables unless the caller flipped it on a dedicated or
     // child session
-    val r = schema.fold(spark.read)(s => spark.read.schema(s))
-    r.parquet(rels.map(abs(dir, _)): _*)
+    val fs = FsOps.fs(spark, new Path(root))
+    val statuses = FsOps.statuses(fs, files)
+    val s = schema.getOrElse(statuses.headOption
+      .map(f => spark.read.parquet(f.getPath.toString).schema)
+      .getOrElse(throw new IllegalStateException(
+        s"no recorded schema and no file to infer one from under $root")))
+    import org.apache.spark.sql.graft.ManifestScan
+    ManifestScan.parquetFiles(spark, fs.makeQualified(new Path(root)), s,
+      new org.apache.spark.sql.types.StructType(),
+      Seq(ManifestScan.Group(org.apache.spark.sql.catalyst.InternalRow.empty, statuses)))
   }
 
-  /** Read the table's logical content as of the current manifest. */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val m = currentManifest(spark, dir).getOrElse(
-      throw new NoTableException(s"no committed manifest under $dir"))
+  /** Every file of snapshot `m` under its [[readSchemaOf]] schema —
+    * the recorded one, so files that predate a widening surface typed
+    * NULLs, with field ids only where every file carries them.
+    */
+  private[graft] def readManifest(spark: SparkSession, dir: String, m: Manifest): DataFrame =
     scanFiles(spark, dir, m.allFiles, readSchemaOf(spark, m, dir))
-  }
+
+  /** Read the table's logical content as of the current manifest. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    readManifest(spark, dir, currentManifest(spark, dir).getOrElse(
+      throw new NoTableException(s"no committed manifest under $dir")))
 
   /** Read as of generation `gen` (time travel across retained gens).
     * The snapshot's own schema applies — a column added later does not
@@ -973,12 +999,11 @@ object Upsert {
       throw new IllegalStateException(s"no manifest for gen=$gen under $dir (vacuumed or never committed)"))
     // the generation's OWN schema (names as declared back then) with
     // field ids: files staged after a later rename still resolve
-    scanFiles(spark, dir, m.allFiles, readSchemaOf(spark, m, dir))
+    readManifest(spark, dir, m)
   }
 
   def readIfExists(spark: SparkSession, dir: String): Option[DataFrame] =
-    currentManifest(spark, dir).map(m =>
-      scanFiles(spark, dir, m.allFiles, readSchemaOf(spark, m, dir)))
+    currentManifest(spark, dir).map(readManifest(spark, dir, _))
 
   /** Driver-side layout snapshot for the DSv2 bucketed reader
     * ([[graft.sources.UpsertBucketSource]]). One manifest resolution +
@@ -1022,21 +1047,8 @@ object Upsert {
       // fires where a scan is built (UpsertBucketTable.newScanBuilder)
       val schema = declaredSchemaOf(m)
         .getOrElse(scanFiles(spark, dir, m.allFiles).schema)
-      val fs = FsOps.fs(spark, new Path(dir))
-      // ONE listStatus per referenced bucket dir instead of one
-      // getFileStatus RPC per file — O(dirs), not O(files), round
-      // trips on object storage
-      val lenByRel: Map[String, Long] = m.allFiles
-        .groupBy(rel => rel.split('/').init.mkString("/"))
-        .flatMap { case (bd, rs) =>
-          val listed = fs.listStatus(new Path(abs(dir, bd))).iterator
-            .filter(_.isFile).map(st => st.getPath.getName -> st.getLen).toMap
-          rs.map { rel =>
-            val name = rel.substring(rel.lastIndexOf('/') + 1)
-            rel -> listed.getOrElse(name,
-              fs.getFileStatus(new Path(abs(dir, rel))).getLen)
-          }
-        }
+      val lenByRel = m.allFiles.zip(FsOps.statuses(FsOps.fs(spark, new Path(dir)),
+        m.allFiles.map(rel => new Path(abs(dir, rel)))).map(_.getLen)).toMap
       val files = m.files.collect { case (b, rels) if b != SchemaBucket =>
         b -> rels.map(rel => (new Path(abs(dir, rel)).toString, lenByRel(rel)))
       }
@@ -1224,9 +1236,8 @@ object Upsert {
         if (dataFiles.nonEmpty && dataFiles.forall(m.rowCounts.contains))
           Some(dataFiles.map(m.rowCounts).sum)
         else None
-      var liveBytes = 0L
-      live.foreach(rel =>
-        liveBytes += fs.getFileStatus(new Path(abs(dir, rel))).getLen)
+      val liveBytes = FsOps.statuses(fs, live.toSeq.map(rel => new Path(abs(dir, rel))))
+        .map(_.getLen).sum
       val liveBucketDirs = m.allFiles
         .map(rel => rel.split('/').init.mkString("/")).distinct
       val bloomBuckets = liveBucketDirs.count(bd =>
@@ -1355,7 +1366,7 @@ object Upsert {
       }
     }
     if (files.isEmpty) // provably no file can hold any key
-      scanFiles(spark, dir, m.allFiles, readSchemaOf(spark, m, dir)).filter(lit(false))
+      readManifest(spark, dir, m).filter(lit(false))
     else {
       val df = scanFiles(spark, dir, files, readSchemaOf(spark, m, dir))
       df.filter(residual(df))
@@ -2472,7 +2483,7 @@ object Upsert {
           fs.exists(new Path(abs(dir, s"$parent/${Blooms.SidecarName}")))
         }
       }
-    val df = scanFiles(spark, dir, man.allFiles, readSchemaOf(spark, man, dir))
+    val df = readManifest(spark, dir, man)
     val merged0 = withBucket(df, pk, newNumBuckets)
     val gen = nextGen(spark, dir)
     // full rewrite: every file is new, so the id era resets to this gen

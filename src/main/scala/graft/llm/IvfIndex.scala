@@ -448,30 +448,28 @@ object IvfIndex {
     // uniformity modulo nullability: file relations serve every column
     // nullable anyway (ManifestScan normalizes like DataSource does),
     // and build-written cells carry `__v NOT NULL` where ingest-merged
-    // cells record it nullable — same content contract
-    val cellSchemas = cellMans
-      .map { case (_, d, m) =>
-        Upsert.readSchemaOf(spark, m, d)
-          .map(org.apache.spark.sql.graft.ManifestScan.asNullable)
-      }.distinct
-    require(cellSchemas.size <= 1,
+    // cells record it nullable — same content contract. A catalogString
+    // names every column and type, and no nullability.
+    val cellSchemas = cellMans.map { case (_, d, m) => Upsert.readSchemaOf(spark, m, d) }
+    val shapes = cellSchemas.map(_.map(_.catalogString)).distinct
+    require(shapes.size <= 1,
       s"IVF cells under $indexDir disagree on schema " +
-        s"(${cellSchemas.mkString(" vs ")}) — cells are written by one " +
+        s"(${shapes.mkString(" vs ")}) — cells are written by one " +
         "build/ingest pipeline and must stay uniform; rebuild the index")
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val groups = cellMans.map { case (c, d, m) =>
       org.apache.spark.sql.graft.ManifestScan.Group(
         org.apache.spark.sql.catalyst.InternalRow(c),
-        m.allFiles.map(f => fs.getFileStatus(
+        graft.io.FsOps.statuses(fs, m.allFiles.map(f =>
           new org.apache.hadoop.fs.Path(s"${d.stripSuffix("/")}/$f"))))
     }.filter(_.files.nonEmpty)
     if (groups.isEmpty)
       return spark.emptyDataset[(Long, Long, Long, Double)]
         .toDF("q_id", "c_id", "rnk", "sim")
     val schema = cellSchemas.headOption.flatten.getOrElse(
-      // legacy cell manifest without a recorded schema: one driver-side
-      // footer inference from a single live file (no distributed job)
+      // legacy cell manifest without a recorded schema: footer inference
+      // from a single live file, a one-task Spark job
       spark.read.parquet(groups.head.files.head.getPath.toString).schema)
     org.apache.spark.sql.graft.ManifestScan.parquetFiles(spark,
       new org.apache.hadoop.fs.Path(indexDir), schema,

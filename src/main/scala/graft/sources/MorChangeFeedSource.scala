@@ -3,16 +3,14 @@ package graft.sources
 import java.util
 
 import org.apache.hadoop.fs.FileStatus
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.graft.{Bridge, ParquetScanShim}
-import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.graft.ParquetScanShim
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -129,92 +127,20 @@ object MorChangeFeedSource {
     listed.filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
       !st.getPath.getName.startsWith("."))
 
-  /** Delta batches as ONE batch relation over the feed's own reader: one
-    * partition per data file, each row tagged with its batch id in
-    * [[BatchCol]] as a partition value. `batches` holds each batch's id
-    * and listed data files; `dataSchema` their union shape, every column
-    * nullable (a batch lacking a column reads it as NULL). One relation
-    * makes one scan and one codegen stage however many batches are read,
-    * so a plan over a growing delta log keeps its generated code from
-    * one trigger to the next; a union of per-batch scans gave each batch
-    * its own stage and renumbered every stage after it.
-    */
-  private[graft] def readBatches(spark: SparkSession, name: String,
-                                 dataSchema: StructType,
-                                 batches: Seq[(Long, Seq[FileStatus])]): DataFrame = {
-    val parts = batches.flatMap { case (id, files) =>
-      files.map(st => MorFeedPartition(id, st.getPath.toString, st.getLen))
-    }
-    Bridge.ofRows(spark, DataSourceV2Relation.create(
-      MorDeltaTable(name, StructType(dataSchema.fields :+ batchField), parts), None, None))
-  }
-
   private val batchField = StructField(BatchCol, LongType, nullable = false)
 
   /** The reader of feed files whose full row shape is `fullSchema` (data
     * columns plus [[BatchCol]]), producing the `required` columns.
     */
   private[sources] def readerFactory(spark: SparkSession, fullSchema: StructType,
-                                     required: StructType,
-                                     filters: Seq[Filter] = Nil): PartitionReaderFactory = {
+                                     required: StructType): PartitionReaderFactory = {
     val dataSchema = StructType(fullSchema.fields.filterNot(_.name == BatchCol))
     val wantBatch = required.fieldNames.contains(BatchCol)
     val prunedData = StructType(required.fields.filterNot(_.name == BatchCol))
     val support = ParquetScanShim.build(spark, dataSchema,
-      if (wantBatch) StructType(Seq(batchField)) else new StructType(), prunedData, filters,
+      if (wantBatch) StructType(Seq(batchField)) else new StructType(), prunedData, Nil,
       ParquetScanShim.hadoopConf(spark))
     new MorFeedReaderFactory(support, wantBatch)
-  }
-}
-
-/** The batch form of the feed's scan ([[MorChangeFeedSource.readBatches]]):
-  * a fixed list of delta-batch files, read with the stream's reader.
-  */
-private[sources] case class MorDeltaTable(tableName: String, full: StructType,
-                                          parts: Seq[MorFeedPartition])
-    extends Table with SupportsRead {
-  override def name(): String = s"mor-delta:$tableName"
-  override def schema(): StructType = full
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
-      private var required: StructType = full
-      private var pushed = Array.empty[Filter]
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      // data-column filters reach the parquet reader, which skips row
-      // groups by their statistics; Spark still applies every filter
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        pushed = filters.filterNot(_.references.contains(MorChangeFeedSource.BatchCol))
-        filters
-      }
-      override def pushedFilters(): Array[Filter] = pushed
-      override def build(): Scan = MorDeltaScan(MorDeltaTable.this, required, pushed.toSeq)
-    }
-}
-
-/** A [[MorDeltaTable]] read of the `required` columns. Equal scans of
-  * one table are one scan to the planner, which may then reuse an
-  * exchange over them, as it does for Spark's own file scans. Sized for
-  * the planner as those are: the files' bytes, scaled to the share of
-  * the row the pruned columns take.
-  */
-private[sources] case class MorDeltaScan(table: MorDeltaTable, required: StructType,
-                                         pushed: Seq[Filter])
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def description(): String =
-    s"MorDeltaScan ${table.tableName} (${table.parts.map(_.batch).distinct.size} batches)"
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = table.parts.toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    MorChangeFeedSource.readerFactory(SparkSession.active, table.full, required, pushed)
-  override def estimateStatistics(): Statistics = new Statistics {
-    override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(math.max(1L,
-      (table.parts.map(_.len).sum.toDouble / table.full.defaultSize * required.defaultSize).toLong))
-    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
 }
 

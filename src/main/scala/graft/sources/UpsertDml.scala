@@ -132,7 +132,8 @@ private[sources] abstract class StagedDeltaBatchWrite(dir: String,
     val files = messages.collect { case DeltaFileCommit(path) => path }
     try {
       if (files.nonEmpty)
-        fold(spark, spark.read.schema(stagedSchema).parquet(files.toIndexedSeq: _*))
+        fold(spark, Upsert.scanPaths(spark, staging,
+          files.toIndexedSeq.map(new Path(_)), Some(stagedSchema)))
     } finally cleanup(spark)
   }
 

@@ -418,7 +418,8 @@ private[sources] class UpsertStreamingWrite(dir: String, schema0: StructType,
       if (epochId <= applied) return // replayed epoch: already merged
       val files = messages.collect { case StreamFileCommit(p) => p }
       if (files.isEmpty) return // empty epoch: nothing to merge, replay is free
-      val staged0 = spark.read.schema(schema).parquet(files.toIndexedSeq: _*)
+      val staged0 = Upsert.scanPaths(spark, epochDir(epochId),
+        files.toIndexedSeq.map(new Path(_)), Some(schema))
       val staged =
         if (versionFromEpoch)
           staged0.withColumn(versionCol,

@@ -17,6 +17,8 @@ package graft.tools
   */
 object PlanCanon {
 
+  private val FileIndexRe = "\\w+FileIndex\\(".r
+
   def normalize(plan: String): String = {
     val base = plan
       .replaceAll("#\\d+", "#")
@@ -65,9 +67,11 @@ object PlanCanon {
       // mv_rollup_rewrite hashed three ways from three checkouts). The
       // path list becomes `target/...`: the scan's columns and schema
       // name the table.
+      // Keyed on any file index: Spark's InMemoryFileIndex and the
+      // ManifestFileIndex the Upsert and merge-on-read reads go through.
       val l =
-        if (l0.contains("InMemoryFileIndex(") && l0.contains("target/"))
-          l0.replaceAll("InMemoryFileIndex\\(\\d+ paths\\)", "InMemoryFileIndex( paths)")
+        if (FileIndexRe.findFirstIn(l0).isDefined && l0.contains("target/"))
+          l0.replaceAll("(\\w+FileIndex)\\(\\d+ paths\\)", "$1( paths)")
             .replaceAll("(Location: \\w+\\(\\d* paths\\)\\[).*?(?=, PartitionFilters: |$)", "$1target/...]")
         else l0
       if (l.contains("HashedRelationBroadcastMode") || l.contains("BroadcastExchange"))

@@ -8,23 +8,36 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
-/** Listing-free parquet scan over manifest-known files (guide §6 /
-  * VERDICT r15 #1).
+/** Listing-free parquet scan over files graft already knows — the ONE
+  * batch read of a parquet file list graft wrote or a manifest names:
+  * Upsert snapshots and lookups (`graft.io.Upsert.scanFiles`, which
+  * also reads merge-on-read bases), merge-on-read delta batches
+  * (`graft.io.MergeOnRead.readDeltaBatches`, the batch id as a
+  * partition value), the staged files of a streaming-sink epoch and of
+  * a SQL DML commit, and the IVF probe's cells (the cell id as a
+  * partition value).
   *
-  * `spark.read.parquet(files: _*)` re-discovers what a manifest already
-  * records: with more paths than
+  * `spark.read.parquet(files: _*)` re-discovers what the caller already
+  * holds: it statuses every file again, and with more paths than
   * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) the
   * discovery runs as a SPARK JOB with one task per path — the IVF probe
   * over 14 cells × 16 bucket files scheduled a 224-task listing job per
   * query, pure scheduling overhead that inflates under a contended
-  * scheduler (the r15 32-core anti-scaling cluster) and on any real
-  * cluster with more executors than work. This [[FileIndex]] serves the
-  * file list (statused once, driver-side) directly to the planner: no
-  * discovery job, no footer-inference job, and the per-file PARTITION
-  * VALUE (e.g. the IVF cell id) comes from the manifest that named the
-  * file — not from re-parsing the file path (ADVICE r15: a regexp miss
-  * silently dropped rows at the probe join; a manifest-keyed value
-  * cannot misattribute).
+  * scheduler and on any real cluster with more executors than work.
+  * This [[FileIndex]] serves the caller's statused file list directly
+  * to the planner: no discovery job, no footer-inference job, and the
+  * per-file PARTITION VALUE comes from the manifest that named the
+  * file — not from re-parsing the file path (a regexp miss silently
+  * dropped rows at the IVF probe join; a manifest-keyed value cannot
+  * misattribute).
+  *
+  * The index compares by VALUE — roots, groups (file paths included)
+  * and partition schema — so two reads of one snapshot are one relation
+  * to the planner: exchange reuse and `CacheManager` matching work
+  * across them, as they did through `InMemoryFileIndex`'s equality. A
+  * snapshot's files are write-once and a new snapshot names new files,
+  * so two snapshots of one table never compare equal; a root-only
+  * equality would serve a stale cached plan.
   *
   * Lives in the org.apache.spark.sql subpackage because
   * HadoopFsRelation/LogicalRelation construction is private[sql] in
@@ -37,7 +50,7 @@ object ManifestScan {
     */
   final case class Group(values: InternalRow, files: Seq[FileStatus])
 
-  private final class ManifestFileIndex(
+  private final case class ManifestFileIndex(
       roots: Seq[Path],
       groups: Seq[Group],
       override val partitionSchema: StructType) extends FileIndex {
@@ -71,25 +84,19 @@ object ManifestScan {
     override def sizeInBytes: Long = groups.flatMap(_.files.map(_.getLen)).sum
   }
 
-  /** File relations serve every column nullable (`DataSource
-    * .resolveRelation` applies `asNullable` on the v1 path this scan
-    * bypasses) — normalize the same way so plans and downstream
-    * schemas are unchanged vs `spark.read.schema(s).parquet(...)`.
-    */
-  def asNullable(schema: StructType): StructType =
-    schema.asNullable
-
   /** DataFrame over explicit parquet files with an explicit schema —
     * zero discovery/inference jobs, partition values from the caller's
     * manifest. `partitionSchema` columns surface AFTER the data columns
-    * (standard file-source layout).
+    * (standard file-source layout). The data columns serve nullable, as
+    * `DataSource.resolveRelation` makes them on the v1 path this scan
+    * bypasses, so plans and schemas match `spark.read.schema(s)`.
     */
   def parquetFiles(spark: SparkSession,
                    root: Path,
                    dataSchema: StructType,
                    partitionSchema: StructType,
                    groups: Seq[Group]): DataFrame = {
-    val index = new ManifestFileIndex(Seq(root), groups, partitionSchema)
+    val index = ManifestFileIndex(Seq(root), groups, partitionSchema)
     val relation = HadoopFsRelation(
       location = index,
       partitionSchema = partitionSchema,

@@ -107,7 +107,7 @@ class MergeOnReadSpec extends SparkSpec {
         val scanned = s.collect { case f: FileSourceScanExec =>
           f.relation.location.rootPaths.map(_.toString)
         }.flatten
-        assert(scanned.forall(p => !p.contains("/base/")),
+        assert(scanned.forall(p => !p.endsWith("/base")),
           s"base files entered a shuffle exchange:\n$scanned\n$pStr")
       }
       // and the fast path equals the windowed fallback row-for-row
@@ -169,7 +169,7 @@ class MergeOnReadSpec extends SparkSpec {
       import org.apache.spark.sql.execution.FileSourceScanExec
       val baseScans = df.queryExecution.executedPlan.collect {
         case f: FileSourceScanExec
-            if f.relation.location.rootPaths.exists(_.toString.contains("/base/")) => f
+            if f.relation.location.rootPaths.exists(_.toString.endsWith("/base")) => f
       }
       // the cost model broadcastResolve documents: one full-width base
       // scan + one column-pruned PK-only probe for delta-only keys —

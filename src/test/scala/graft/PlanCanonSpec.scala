@@ -54,6 +54,24 @@ class PlanCanonSpec extends AnyFunSuite {
       "the scan's schema stays visible to the hash")
   }
 
+  test("a ManifestFileIndex target/ scan hashes the same from checkouts at paths of different lengths") {
+    def render(root: String) =
+      "FileScan parquet [id#1,ver#2L] Batched: true, DataFilters: [], Format: Parquet, Location: " +
+        org.apache.commons.lang3.StringUtils.abbreviate(
+          s"ManifestFileIndex(1 paths)[file:$root/target/rtdw/dws_sku/base]", 100) +
+        ", PartitionFilters: [], PushedFilters: [], ReadSchema: struct<id:string,ver:bigint>"
+    val short = render("/home/ci/graft")
+    val long = render("/srv/builds/a-checkout-at-a-longer-path/graft")
+    assert(short != long, "the two renderings differ in the path")
+    assert(PlanCanon.sha(short) == PlanCanon.sha(long))
+
+    // keyed on any file index, the rule still leaves source scans alone
+    val c = "FileScan parquet [k#1L] Location: ManifestFileIndex(1 paths)[file:/data/tpch/sf0.1/lineitem.parquet]"
+    val d = "FileScan parquet [k#1L] Location: ManifestFileIndex(3 paths)[file:/data/tpch/sf0.1/lineitem.parquet]"
+    assert(PlanCanon.sha(c) != PlanCanon.sha(d),
+      "source-scan file counts must stay visible to the hash")
+  }
+
   test("run-varying ids normalize; structure does not") {
     val p1 = "*(3) HashAggregate(keys=[k#12], functions=[sum(v#13)])"
     val p2 = "*(5) HashAggregate(keys=[k#99], functions=[sum(v#101)])"
